@@ -8,6 +8,8 @@ commit in the range raises; key_col is only demanded when the range
 actually deletes.
 """
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,7 +24,7 @@ from wills_columnar_format_spark.engine import (
 )
 
 
-@pytest.fixture()
+@pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(
         [(i, f"src{i % 5}", f"text {i}", i % 97) for i in range(400)],
@@ -30,11 +32,12 @@ def docs(spark):
     )
 
 
-@pytest.fixture()
-def ckpt(spark, docs, tmp_path):
+@pytest.fixture(scope="module")
+def pristine_ckpt(spark, docs, tmp_path_factory):
     """create(0) -> delete %10==3 (1) -> upsert %10==4 (2) ->
-    append 400..499 (3) -> re-delete {3,13,5} (4: only 5 newly dead)."""
-    path = str(tmp_path / "m")
+    append 400..499 (3) -> re-delete {3,13,5} (4: only 5 newly dead).
+    Built once per module; tests get private copies (``ckpt``)."""
+    path = str(tmp_path_factory.mktemp("changes") / "m")
     write_checkpoint(
         encode_table(docs, key_col="doc_id", num_partitions=4,
                      chunk_rows=64),
@@ -50,6 +53,15 @@ def ckpt(spark, docs, tmp_path):
         encode_table(extra, key_col="doc_id", num_partitions=2),
         path, mode="append")
     delete_keys_checkpoint(spark, path, [3, 13, 5], "doc_id")
+    return path
+
+
+@pytest.fixture()
+def ckpt(pristine_ckpt, tmp_path):
+    """A private copy of ``pristine_ckpt``: tests append, mutate, and
+    leave decode markers in it."""
+    path = str(tmp_path / "m")
+    shutil.copytree(pristine_ckpt, path)
     return path
 
 

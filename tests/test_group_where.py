@@ -1,5 +1,5 @@
-"""Predicate-filtered grouped pushdowns (``group_sums_where`` /
-``group_stats_where``): the sliced-rollup OLAP shape. A chunk answers
+"""Predicate-filtered grouped pushdowns (``group_sums`` /
+``group_stats`` with ``where=``): the sliced-rollup OLAP shape. A chunk answers
 from metadata only when it is group-pure AND the count_where
 classifier proves every row inside every range; 'out' chunks vanish;
 the rest decode with the exact filter. Pins: equality with a plain
@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from wills_columnar_format_spark.engine import (
     delete_keys,
     encode_table,
-    group_stats_where,
-    group_sums_where,
+    group_stats,
+    group_sums,
 )
 
 
@@ -39,7 +39,7 @@ def _exp_sums(df, cond, g, v):
 
 
 def _got_sums(m, schema, g, v, where):
-    rows = group_sums_where(m, schema, g, v, where).collect()
+    rows = group_sums(m, schema, g, v, where).collect()
     return sorted((r[g], int(r["v_sum"]), r["n_rows"], r["n_nonnull"])
                   for r in rows)
 
@@ -59,8 +59,8 @@ def test_sums_exact(spark, clustered):
 
 def test_stats_exact(spark, clustered):
     df, m = clustered
-    got = group_stats_where(m, df.schema, "source", "v",
-                            ("f", 50.0, 400.0)).collect()
+    got = group_stats(m, df.schema, "source", "v",
+                      ("f", 50.0, 400.0)).collect()
     got = sorted((r["source"], r["v_min"], r["v_max"], r["n_rows"])
                  for r in got)
     exp = (df.filter(F.col("f").between(50.0, 400.0)).groupBy("source")
@@ -72,7 +72,8 @@ def test_stats_exact(spark, clustered):
 def test_metadata_engages_blobless(spark, clustered):
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from wills_columnar_format_spark.engine import _grouped_where_split
+    from wills_columnar_format_spark.engine import (
+        _grouped_split, _where_parse)
 
     df, m = clustered
     # the sharpest proof: NULL the blobs of exactly the chunks the
@@ -80,10 +81,12 @@ def test_metadata_engages_blobless(spark, clustered):
     # (certified chunks never read their bytes), and certification
     # must actually engage on this (group, predicate)-clustered layout
     spec = ("v", 1000, 4000)
-    _, _, _, pure_in, _, _, _ = _grouped_where_split(
-        m, to_arrow_schema(df.schema), "source", "v", spec,
+    schema = to_arrow_schema(df.schema)
+    pure_in, _, _ = _grouped_split(
+        m, schema, "source", "v",
         value_cond=F.col("val_sum").isNotNull(),
-        value_cols=["val_sum", "n_values"], nullable_value_ok=True)
+        value_cols=["val_sum", "n_values"], nullable_value_ok=True,
+        where=_where_parse(schema, spec, None, "group_sums"))
     certified = [r["chunk_key"] for r in
                  pure_in.select("chunk_key").collect()]
     assert len(certified) > 0
@@ -99,12 +102,12 @@ def test_metadata_engages_blobless(spark, clustered):
 
 def test_empty_and_out_predicates(spark, clustered):
     df, m = clustered
-    assert group_sums_where(m, df.schema, "source", "v",
-                            ("v", 10, 5)).collect() == []
-    assert group_sums_where(m, df.schema, "source", "v",
-                            ("v", 10**8, 10**9)).collect() == []
-    assert group_stats_where(m, df.schema, "source", "v",
-                             ("v", 10, 5)).collect() == []
+    assert group_sums(m, df.schema, "source", "v",
+                      ("v", 10, 5)).collect() == []
+    assert group_sums(m, df.schema, "source", "v",
+                      ("v", 10**8, 10**9)).collect() == []
+    assert group_stats(m, df.schema, "source", "v",
+                       ("v", 10, 5)).collect() == []
 
 
 def test_deletion_mask_exact(spark, clustered):
@@ -128,8 +131,8 @@ def test_nullable_value_and_nan(spark):
     cond = F.col("f").between(100.0, 700.0)
     assert (_got_sums(m, df.schema, "g", "v", ("f", 100.0, 700.0))
             == _exp_sums(df, cond, "g", "v"))
-    got = group_stats_where(m, df.schema, "g", "f",
-                            ("id", 100, 800)).collect()
+    got = group_stats(m, df.schema, "g", "f",
+                      ("id", 100, 800)).collect()
     got = sorted((r["g"], r["v_min"], r["v_max"], r["n_rows"])
                  for r in got)
     exp = (df.filter(F.col("id").between(100, 800)).groupBy("g")
@@ -143,6 +146,6 @@ def test_nullable_value_and_nan(spark):
 def test_type_validation(spark, clustered):
     df, m = clustered
     with pytest.raises(TypeError):
-        group_sums_where(m, df.schema, "source", "f", ("v", 0, 1))
+        group_sums(m, df.schema, "source", "f", ("v", 0, 1))
     with pytest.raises(TypeError):
-        group_sums_where(m, df.schema, "source", "v", ("source", "a", "z"))
+        group_sums(m, df.schema, "source", "v", ("source", "a", "z"))

@@ -145,6 +145,37 @@ def test_media_meta_noncanonical_wav(spark):
         ("wav", 3, 22050)
 
 
+def test_media_meta_skips_undecodable_bmps(spark):
+    # 'BM' payloads decode_media refuses (8-bit palettized, RLE8) are
+    # not classified as bmp: bpp//8 would report 1 channel / 1 channel
+    import struct
+
+    from wills_columnar_format_spark.operators.multimodal import (
+        decode_media, media_meta, synth_bmp)
+
+    def bmp_header(bpp, compression):
+        info = struct.pack("<IiiHHIIiiII", 40, 16, 8, 1, bpp, compression,
+                           0, 2835, 2835, 256, 0)
+        return (b"BM" + struct.pack("<IHHI", 54 + 1024 + 128, 0, 0,
+                                    54 + 1024) + info
+                + b"\x00" * (1024 + 128))
+
+    palettized, rle = bmp_header(8, 0), bmp_header(8, 1)
+    for payload in (palettized, rle):
+        with pytest.raises(NotImplementedError):
+            decode_media(payload)
+    df = spark.createDataFrame(
+        [(1, palettized), (2, rle), (3, synth_bmp(4, 3))],
+        "id bigint, payload binary")
+    got = {r["id"]: r for r in media_meta(df, "payload", "id").collect()}
+    for i in (1, 2):
+        assert (got[i]["media_type"], got[i]["width"], got[i]["height"],
+                got[i]["channels"]) == (None, None, None, None)
+        assert got[i]["n_bytes"] == len(palettized)
+    assert (got[3]["media_type"], got[3]["width"], got[3]["height"],
+            got[3]["channels"]) == ("bmp", 4, 3, 3)
+
+
 def test_frame_sample_zero_copy_and_nulls(spark):
     from wills_columnar_format_spark.operators.multimodal import frame_sample
 

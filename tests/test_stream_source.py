@@ -499,3 +499,43 @@ def test_sink_replay_heal_is_idempotent(tmp_path):
     writer().commit([ds._WcfsCommit(files=["part-b2x.parquet"])], 2)
     assert sum(r["files"] == ["part-b2.parquet"]
                for r in eng.read_commit_log(d)) == 1
+
+
+def test_sink_heal_marker_without_mtime_is_stale(tmp_path, monkeypatch):
+    # a filesystem whose get_file_info reports no mtime for the claimed
+    # .heal marker: the liveness fallback must treat it as stale and
+    # heal the orphaned batch, not wait on an age that never grows
+    import types
+
+    from pyarrow import fs as pafs
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from wills_columnar_format_spark import datasource as ds
+    from wills_columnar_format_spark import engine as eng
+
+    class NoMtimeFS(pafs.LocalFileSystem):
+        def get_file_info(self, paths):
+            info = super().get_file_info(paths)
+            if isinstance(paths, str) and paths.endswith(".heal"):
+                return types.SimpleNamespace(
+                    type=info.type, path=info.path,
+                    base_name=info.base_name)
+            return info
+
+    d = str(tmp_path / "sink")
+    schema = StructType([StructField("doc_id", StringType())])
+
+    def writer():
+        return ds.WcfsStreamWriter(schema, {"path": d}, False)
+
+    writer().commit([ds._WcfsCommit(files=["part-b0.parquet"])], 0)
+    # batch 1 crashed after its marker AND after a healer's claim, but
+    # before any ledger append: marker + fresh .heal, files unattributed
+    with open(f"{d}/_stream_commits/0000000001.json", "w") as f:
+        json.dump({"batch_id": 1, "files": ["part-b1.parquet"]}, f)
+    with open(f"{d}/_stream_commits/0000000001.heal", "w") as f:
+        f.write("{}")
+    monkeypatch.setattr(eng, "_manifest_fs", lambda p: (NoMtimeFS(), p))
+    writer().commit([ds._WcfsCommit(files=["part-b1x.parquet"])], 1)
+    assert sum(r["files"] == ["part-b1.parquet"]
+               for r in eng.read_commit_log(d)) == 1

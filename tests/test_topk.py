@@ -3,7 +3,7 @@ chunks, decoding only chunks the certified zone-map threshold (tau)
 cannot exclude. Pins: exact equality with a full decode + sort on both
 directions; the prune actually prunes on value-clustered layouts; every
 degrade rule (legacy manifest, nullable, deletion-masked, floats without
-histograms, k >= n) falls back to the same exact answer; NaN rows never
+histograms, k >= n) keeps the same exact answer; NaN rows never
 rank; int64 values past 2^53 survive the float64 zone metadata (the
 non-tau side of the synthesized range is open by design)."""
 
@@ -116,7 +116,14 @@ def test_nullable_and_deleted_fall_back_exact(spark):
     m2 = encode_table(clean, key_col="id", num_partitions=2,
                       chunk_rows=64).localCheckpoint(eager=True)
     deleted = delete_keys(m2, [398, 399], "id").localCheckpoint(eager=True)
-    assert _topk_threshold(deleted, "v", 5, True, need_hist=False) is None
+    # deletion-masked chunks only drop out of the tau, so any tau must
+    # still be sound for the live rows: <= the k-th largest live value
+    vr = _topk_threshold(deleted, "v", 5, True, need_hist=False)
+    live = sorted((r["v"] for r in clean.filter(
+        ~F.col("id").isin(398, 399)).select("v").collect()), reverse=True)
+    assert vr is None or vr[1] <= live[4]
+    # ...and the unmasked chunks still certify one
+    assert vr is not None
     want = _exact_topk(clean.filter(~F.col("id").isin(398, 399)), "v", 5)
     assert _got_topk(deleted, clean.schema, "v", 5) == want
 
@@ -204,7 +211,7 @@ def test_validation(spark):
 
 
 # ---------------------------------------------------------------------------
-# topk_where: the filtered leaderboard
+# topk_table / topk_checkpoint with where=: the filtered leaderboard
 # ---------------------------------------------------------------------------
 
 
@@ -235,8 +242,6 @@ def sliced(spark):
 
 
 def test_topk_where_exact_all_shapes(spark, sliced):
-    from wills_columnar_format_spark.engine import topk_where
-
     df, m = sliced
     cases = [
         (dict(where=("f", 50.0, 400.0)), F.col("f").between(50.0, 400.0),
@@ -250,22 +255,21 @@ def test_topk_where_exact_all_shapes(spark, sliced):
     ]
     for kw, cond, col, desc in cases:
         got = [(r[col], r["id"]) for r in
-               topk_where(m, df.schema, col, 25, descending=desc,
+               topk_table(m, df.schema, col, 25, descending=desc,
                           extra_order=("id",), **kw)
                .select(col, "id").collect()]
         assert got == _exact_topk_where(df, cond, col, 25, desc)
 
 
 def test_topk_where_prunes_and_degrades(spark, sliced):
-    from wills_columnar_format_spark.engine import (
-        _count_where_classify, _topk_threshold_where, topk_where)
+    from wills_columnar_format_spark.engine import _count_where_classify
     from pyspark.sql.pandas.types import to_arrow_schema
 
     df, m = sliced
     schema = to_arrow_schema(df.schema)
     # tau certifies on the clustered layout (the 'in' chunks carry it)
     cls = _count_where_classify(m, schema, [], [("lang", ["en"])])
-    vr = _topk_threshold_where(m, cls, "v", 25, True, need_hist=False)
+    vr = _topk_threshold(m, "v", 25, True, need_hist=False, cls=cls)
     assert vr is not None and vr[1] > 0
     # nullable ranked column -> no tau, still exact
     df2 = spark.createDataFrame(
@@ -274,44 +278,42 @@ def test_topk_where_prunes_and_degrades(spark, sliced):
     m2 = encode_table(df2, key_col="id", num_partitions=2, chunk_rows=128,
                       allow_nulls=True).localCheckpoint(eager=True)
     got = [(r["v"], r["id"]) for r in
-           topk_where(m2, df2.schema, "v", 10,
+           topk_table(m2, df2.schema, "v", 10,
                       where_in=("lang", ["en"]), extra_order=("id",))
            .select("v", "id").collect()]
     assert got == _exact_topk_where(df2, F.col("lang") == "en", "v", 10)
 
 
 def test_topk_where_empty_and_validation(spark, sliced):
-    from wills_columnar_format_spark.engine import topk_where
-
     df, m = sliced
-    assert topk_where(m, df.schema, "v", 5,
+    assert topk_table(m, df.schema, "v", 5,
                       where=("v", 10, 5)).collect() == []
-    assert topk_where(m, df.schema, "v", 5,
+    assert topk_table(m, df.schema, "v", 5,
                       where=("v", 10**8, 10**9)).collect() == []
     with pytest.raises(ValueError):
-        topk_where(m, df.schema, "v", 5)
+        topk_table(m, df.schema, "v", 5, where=[])
     with pytest.raises(TypeError):
-        topk_where(m, df.schema, "lang", 5, where=("v", 0, 1))
+        topk_table(m, df.schema, "lang", 5, where=("v", 0, 1))
 
 
 def test_topk_where_checkpoint_exact(spark, sliced, tmp_path):
     from wills_columnar_format_spark.engine import (
-        delete_keys_checkpoint, topk_where_checkpoint, write_checkpoint)
+        delete_keys_checkpoint, write_checkpoint)
 
     df, m = sliced
     d = str(tmp_path / "twc")
     write_checkpoint(m, d, schema=df.schema)
     got = [(r["v"], r["id"]) for r in
-           topk_where_checkpoint(spark, d, "v", 25,
-                                 where_in=("lang", ["en"]),
-                                 extra_order=("id",))
+           topk_checkpoint(spark, d, "v", 25,
+                           where_in=("lang", ["en"]),
+                           extra_order=("id",))
            .select("v", "id").collect()]
     assert got == _exact_topk_where(df, F.col("lang") == "en", "v", 25)
     # ascending + range predicate on the float column
     got = [(r["f"], r["id"]) for r in
-           topk_where_checkpoint(spark, d, "f", 25,
-                                 where=("v", 600, 4000),
-                                 descending=False, extra_order=("id",))
+           topk_checkpoint(spark, d, "f", 25,
+                           where=("v", 600, 4000),
+                           descending=False, extra_order=("id",))
            .select("f", "id").collect()]
     assert got == _exact_topk_where(df, F.col("v").between(600, 4000),
                                     "f", 25, descending=False)
@@ -319,15 +321,15 @@ def test_topk_where_checkpoint_exact(spark, sliced, tmp_path):
     delete_keys_checkpoint(spark, d, list(range(100, 200)), key_col="id")
     live = df.filter(~F.col("id").between(100, 199))
     got = [(r["v"], r["id"]) for r in
-           topk_where_checkpoint(spark, d, "v", 25,
-                                 where_in=("lang", ["fr"]),
-                                 extra_order=("id",))
+           topk_checkpoint(spark, d, "v", 25,
+                           where_in=("lang", ["fr"]),
+                           extra_order=("id",))
            .select("v", "id").collect()]
     assert got == _exact_topk_where(live, F.col("lang") == "fr", "v", 25)
     got0 = [(r["v"], r["id"]) for r in
-            topk_where_checkpoint(spark, d, "v", 25,
-                                  where_in=("lang", ["fr"]),
-                                  extra_order=("id",), as_of=0)
+            topk_checkpoint(spark, d, "v", 25,
+                            where_in=("lang", ["fr"]),
+                            extra_order=("id",), as_of=0)
             .select("v", "id").collect()]
     assert got0 == _exact_topk_where(df, F.col("lang") == "fr", "v", 25)
 
@@ -335,16 +337,15 @@ def test_topk_where_checkpoint_exact(spark, sliced, tmp_path):
 def test_topk_where_checkpoint_over_cap(spark, sliced, tmp_path,
                                         monkeypatch):
     from wills_columnar_format_spark import engine
-    from wills_columnar_format_spark.engine import (
-        topk_where_checkpoint, write_checkpoint)
+    from wills_columnar_format_spark.engine import write_checkpoint
 
     df, m = sliced
     d = str(tmp_path / "twc_cap")
     write_checkpoint(m, d, schema=df.schema)
     monkeypatch.setattr(engine, "VALUE_PRUNE_MAX_KEYS", 1)
     got = [(r["v"], r["id"]) for r in
-           topk_where_checkpoint(spark, d, "v", 10,
-                                 where_in=("lang", ["en"]),
-                                 extra_order=("id",))
+           topk_checkpoint(spark, d, "v", 10,
+                           where_in=("lang", ["en"]),
+                           extra_order=("id",))
            .select("v", "id").collect()]
     assert got == _exact_topk_where(df, F.col("lang") == "en", "v", 10)

@@ -811,10 +811,13 @@ class WcfsStreamWriter(WcfsWriter, DataSourceStreamArrowWriter):
                     # caveat _publish_exclusive documents for S3).
                     import time as _time
 
+                    # no mtime (a filesystem that reports none) reads
+                    # as stale: age 0 would leave the batch orphaned
+                    # forever
                     info = fsys.get_file_info(healm)
                     mtime = getattr(info, "mtime", None)
                     age = (_time.time() - mtime.timestamp()
-                           if mtime is not None else 0.0)
+                           if mtime is not None else float("inf"))
                     if age >= _HEAL_STALE_SECONDS:
                         eng._append_commit(self._path, "append", "",
                                            first)

@@ -18,10 +18,11 @@ value stream (src/lib.rs:25-33).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -9003,13 +9004,186 @@ def column_ndv(manifest_df):
     )
 
 
+# ---------------------------------------------------------------------------
+# hybrid metadata/decode analytics over one snapshot
+# ---------------------------------------------------------------------------
+#
+# count/sum/top-k/group-by each answer what the manifest metadata can
+# prove and decode only the rest — the compute-on-compressed idea
+# (org:1034-1048) plus metadata partition elimination. Each is written
+# once over a _Snapshot, which hides whether the table is an in-memory
+# manifest frame or a persisted checkpoint directory.
+
+
+class _Snapshot:
+    """One table version for the hybrid pushdowns: its Arrow ``schema``,
+    its metadata ``frame`` (a manifest frame, None for an empty
+    ``as_of`` snapshot) and ``decode``. The frame loads on first use, so
+    argument validation and unsatisfiable predicates never touch the
+    table. Build it with ``of_manifest`` or ``of_checkpoint``."""
+
+    def __init__(self, spark, schema, load, ckpt_dir=None, as_of=None):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.spark = spark
+        self.schema = (schema if isinstance(schema, pa.Schema)
+                       else to_arrow_schema(schema))
+        self._load, self._ckpt, self._as_of = load, ckpt_dir, as_of
+
+    @classmethod
+    def of_manifest(cls, manifest_df, out_schema):
+        # pin an in-flight encode lineage ONCE: the classifier, the
+        # thresholds and the decode each re-evaluate the manifest, and
+        # the default range partitioner's sampler is nondeterministic —
+        # drifted chunk boundaries would silently desync the
+        # semi-joined chunk_keys. Persisted manifests re-scan for
+        # pennies and skip the pin.
+        def load():
+            if _cheap_rescan(manifest_df):
+                return manifest_df
+            return manifest_df.localCheckpoint(eager=True)
+
+        return cls(manifest_df.sparkSession, out_schema, load)
+
+    @classmethod
+    def of_checkpoint(cls, spark, ckpt_dir: str, out_schema=None,
+                      as_of=None):
+        """The checkpoint as of commit ``as_of`` (None: current). The
+        frame is the manifest parquet itself; callers select metadata
+        columns only, so parquet column pruning keeps the blob bytes
+        unread. ``out_schema=None`` resolves the ``_table_schema``
+        sidecar."""
+        _raise_if_pending(ckpt_dir)
+        if out_schema is None:
+            out_schema = read_checkpoint_schema(ckpt_dir)
+            if out_schema is None:
+                raise ValueError(
+                    f"checkpoint {ckpt_dir!r} carries no _table_schema "
+                    "sidecar — pass out_schema=, or persist with "
+                    "write_checkpoint(manifest, dir, schema=...)")
+
+        def load():
+            if as_of is None:
+                return spark.read.parquet(ckpt_dir)
+            allowed = _files_as_of(ckpt_dir, as_of)
+            if not allowed:
+                return None
+            return spark.read.parquet(
+                *[f"{ckpt_dir.rstrip('/')}/{b}" for b in allowed])
+
+        return cls(spark, out_schema, load, ckpt_dir, as_of)
+
+    @functools.cached_property
+    def frame(self):
+        return self._load()
+
+    def decode(self, columns, keep=None, value_range=None, value_in=None):
+        """Decode ``columns`` of exactly the chunks ``keep`` names (a
+        ``chunk_key`` frame), or, when ``keep`` is None, of every chunk
+        the ``value_range``/``value_in`` zone maps admit. Returns
+        ``(decoded, split)``. ``split`` is True when only ``keep``'s
+        chunks were read, so the caller may answer the other chunks from
+        metadata. A checkpoint keeping more than VALUE_PRUNE_MAX_KEYS
+        chunks instead decodes the whole zone-pruned snapshot (the
+        restriction map would not fit the driver): same rows, ``split``
+        False, and the caller drops its metadata side."""
+        if self._ckpt is None:
+            if keep is None:
+                return decode_table(
+                    self.frame, self.schema, columns=columns,
+                    value_range=value_range, value_in=value_in), False
+            # keep already names the exact chunk set: the zone prune's
+            # eager hit-key jobs would be pure overhead
+            return decode_table(
+                self.frame.join(keep, "chunk_key", "left_semi"),
+                self.schema, columns=columns), True
+        restrict = (None if keep is None
+                    else _collect_chunk_files(self.frame, keep))
+        if restrict is None:
+            return decode_checkpoint(
+                self.spark, self._ckpt, self.schema, columns=columns,
+                value_range=value_range, value_in=value_in,
+                as_of=self._as_of), False
+        return decode_checkpoint(
+            self.spark, self._ckpt, self.schema, columns=columns,
+            as_of=self._as_of, _restrict_chunks=restrict), True
+
+
+class _Where(NamedTuple):
+    """A parsed hybrid predicate (``_where_parse``): normalized range
+    ``specs``, IN-list ``in_specs``, their AND-combined exact filter
+    ``cond``, and False ``satisfiable`` when it provably matches
+    nothing."""
+
+    specs: list
+    in_specs: list
+    cond: object
+    satisfiable: bool
+
+    @property
+    def cols(self) -> set:
+        """Top-level columns the predicates read (decode projection)."""
+        return {s[0].split("#", 1)[0] for s in self.specs + self.in_specs}
+
+    @property
+    def value_range(self):
+        """The range specs as a decode ``value_range=`` argument."""
+        if not self.specs:
+            return None
+        return self.specs if len(self.specs) > 1 else self.specs[0]
+
+    @property
+    def value_in(self):
+        """The first IN spec as a decode ``value_in=`` argument: the
+        decode paths take at most ONE — further lists ride the exact
+        post-filter only (correct, just less pruned)."""
+        if not self.in_specs:
+            return None
+        return (self.in_specs[0][0], self.in_specs[0][1])
+
+
+def _where_parse(schema, where, where_in, fn: str, required: bool = True):
+    """The predicate preamble of every hybrid pushdown: validate
+    ``where`` ranges (``_where_specs``) and ``where_in`` IN-lists
+    (``_where_in_specs``) against ``schema`` into one ``_Where``. With
+    neither given, raise for ``fn`` when ``required``, else return
+    None (the unfiltered form of the analytic)."""
+    specs, cond, satisfiable = _where_specs(schema, where)
+    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
+    if not specs and not in_specs:
+        if required:
+            raise ValueError(f"{fn} needs where= and/or where_in=")
+        return None
+    if cond is None:
+        cond = in_cond
+    elif in_cond is not None:
+        cond = cond & in_cond
+    return _Where(specs, in_specs, cond, satisfiable and in_sat)
+
+
 def _topk_threshold(manifest_df, value_col: str, k: int, descending: bool,
-                    need_hist: bool):
+                    need_hist: bool, cls=None):
     """The certified top-k prune threshold, metadata only: a
-    ``value_range`` 3-tuple ``topk_table`` can hand to ``decode_table``,
-    or None when the manifest cannot certify one (legacy manifest, a
-    nullable or deletion-masked column, floats without full histogram
-    coverage, k >= total rows) — the caller then decodes everything.
+    ``value_range`` 3-tuple the top-k decode can prune with, or None
+    when nothing certifies one (the caller then decodes every chunk its
+    predicate keeps).
+
+    Each chunk certifies that all of its ``n_values`` ranked values lie
+    >= ``val_min`` (descending case), so ordering chunks by ``val_min``
+    DESC and accumulating ``n_values`` until the running total reaches
+    k yields tau = that chunk's ``val_min``, with "at least k values
+    are certainly >= tau"; every chunk whose ``val_max`` < tau is then
+    provably outside the answer. Only chunks whose count is exact for
+    the ranked rows accumulate: with a predicate classification ``cls``
+    (``_count_where_classify``) the 'in' chunks only (a 'dec' chunk's
+    rows may fail the predicate); without one, every chunk except the
+    deletion-masked ones (their counts are stale supersets). A nullable
+    column certifies nothing (null rows count in ``n_values`` but never
+    rank), nor does a legacy manifest without value maps; with
+    ``need_hist`` (floats) chunks without a histogram drop, because the
+    encoder withholds histograms from NaN-bearing chunks and NaN never
+    ranks; and k >= the accumulated rows gives None. Every drop only
+    LOWERS tau, so it decodes more and never lies.
 
     The non-tau side of the returned range is OPEN (±inf), never a
     synthesized max/min literal: zone metadata stores float64, and a
@@ -9023,33 +9197,26 @@ def _topk_threshold(manifest_df, value_col: str, k: int, descending: bool,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if "val_min" not in manifest_df.columns:
+    if "val_min" not in manifest_df.columns or (
+            need_hist and "val_hist" not in manifest_df.columns):
         return None
+    if _nullable_columns(manifest_df).filter(
+            F.col("column_name") == value_col).count():
+        return None
+    if cls is not None:
+        exact = (cls.filter(F.col("__cls") == "in").select("chunk_key"),
+                 "left_semi")
+    else:
+        exact = (manifest_df.filter(F.col("column").startswith(
+            DELETES_PREFIX)).select("chunk_key"), "left_anti")
     base = (
         _stats_base(manifest_df)
         .filter(F.col("column") == value_col)
-        .select("n_values", "val_min", "val_max",
-                *(["val_hist"] if "val_hist" in manifest_df.columns
-                  and need_hist else []))
+        .join(exact[0], "chunk_key", exact[1])
+        .filter(F.col("val_min").isNotNull())
     )
-    gate = base.agg(
-        F.count("*").alias("c"),
-        F.count("val_min").alias("m"),
-        (F.count("val_hist") if need_hist and "val_hist" in base.columns
-         else F.lit(0)).alias("h"),
-        F.sum("n_values").alias("n"),
-    ).collect()[0]
-    certified = (
-        gate["c"] > 0 and gate["m"] == gate["c"]
-        and (not need_hist or gate["h"] == gate["c"])
-        and gate["n"] is not None and int(gate["n"]) > k
-        and not _nullable_columns(manifest_df)
-        .filter(F.col("column_name") == value_col).count()
-        and not _deletion_affected_columns(manifest_df)
-        .filter(F.col("column_name") == value_col).count()
-    )
-    if not certified:
-        return None
+    if need_hist:
+        base = base.filter(F.col("val_hist").isNotNull())
     # metadata-scale ordered cumulative sum (#distinct bounds rows —
     # same single-task window column_quantiles accepts)
     bound = F.col("val_min") if descending else F.col("val_max")
@@ -9061,16 +9228,19 @@ def _topk_threshold(manifest_df, value_col: str, k: int, descending: bool,
                 F.col("b").desc() if descending else F.col("b").asc()
             ).rowsBetween(Window.unboundedPreceding, 0)))
     )
-    agg = (F.max("b") if descending else F.min("b"))
-    tau = cum.filter(F.col("cum") >= k).agg(agg).collect()[0][0]
-    if tau is None:
+    reached = F.when(F.col("cum") >= k, F.col("b"))
+    tau, total = cum.agg(
+        F.max(reached) if descending else F.min(reached),
+        F.max("cum")).collect()[0]
+    if tau is None or total <= k:
         return None
     return ((value_col, float(tau), float("inf")) if descending
             else (value_col, float("-inf"), float(tau)))
 
 
 def topk_table(manifest_df, out_schema, value_col: str, k: int,
-               descending: bool = True, columns=None, extra_order=()):
+               descending: bool = True, columns=None, extra_order=(),
+               where=None, where_in=None):
     """TOP-K pushdown: the ``k`` rows with the largest (``descending``,
     default) or smallest non-null ``value_col``, decoding only chunks
     the per-chunk value zone maps cannot exclude from the answer — the
@@ -9078,54 +9248,104 @@ def topk_table(manifest_df, out_schema, value_col: str, k: int,
     row-skipping wish, org:187-194, pointed at ranking instead of
     equality).
 
-    Certified threshold, metadata only: each chunk certifies that all
-    of its ``n_cert`` ranked values lie >= ``val_min`` (descending
-    case), so ordering chunks by ``val_min`` DESC and accumulating
-    ``n_cert`` until the running total reaches k yields
-    tau = that chunk's ``val_min`` with the guarantee "at least k
-    values are certainly >= tau"; the true k-th largest is therefore
-    >= tau and every chunk whose ``val_max`` < tau is provably
-    irrelevant. The decode then rides the existing
-    ``value_range=(value_col, tau, +inf)`` broadcast-semi-join
-    prune and an exact ``ORDER BY ... LIMIT k`` finishes (Spark plans
-    it as TakeOrderedAndProject — per-partition top-k heaps, only k
-    rows per partition ever reach the driver). ``n_cert`` is
-    ``n_values`` for integer-backed columns (NaN-free by type); FLOAT
-    columns additionally require full ``val_hist`` coverage
-    (``encode_table(histograms=True)`` — the encoder withholds
-    histograms from NaN-bearing and nullable chunks, and a NaN/null
-    row never counts toward "certainly >= val_min").
+    A certified threshold tau (``_topk_threshold``, metadata only)
+    excludes every chunk whose extreme cannot reach it; the decode then
+    rides the ``value_range=(value_col, tau, +inf)`` prune and an exact
+    ``ORDER BY ... LIMIT k`` finishes (Spark plans it as
+    TakeOrderedAndProject — per-partition top-k heaps, only k rows per
+    partition ever reach the driver). Certification degrades, never
+    lies: a legacy manifest without value maps, a nullable column,
+    floats without histograms (``encode_table(histograms=True)``), or
+    k >= the certifiable rows each fall back to a full decode + exact
+    sort — the same rows, no prune. Deletion-masked chunks only drop
+    out of the tau. NaN rows are excluded from the ranking on every
+    path (documented semantics; engines disagree on NaN order).
 
-    Certification degrades, never lies: a legacy manifest without
-    value maps, a nullable column (zero fillers poison the maps), a
-    deletion-masked column (counts would be stale supersets), floats
-    without full histograms, or k >= total rows each fall back to a
-    full decode + exact sort — the same rows, no prune. NaN rows are
-    excluded from the ranking on every path (documented semantics;
-    engines disagree on NaN order).
-
-    On a layout clustered by ``value_col`` (range partitioner keyed on
-    it, z-order including it) this decodes O(k / chunk_rows) chunks of
-    an arbitrarily large table; on an uncorrelated layout every chunk
-    may qualify and it degrades to the plain sort, never worse.
-    ``extra_order`` appends deterministic tie-break columns;
-    ``columns`` projects the decode (must include ``value_col``'s
-    top-level field and the tie-breaks). int/float columns only: the
-    tau literal re-enters ``value_range`` as a plain number, which the
+    ``where``/``where_in`` (``count_where``'s grammar) make it the
+    filtered leaderboard ``SELECT ... WHERE ... ORDER BY v LIMIT k``:
+    chunks the predicate classifier proves 'out' never open, tau
+    accumulates over 'in' chunks only, and the exact predicate filters
+    apply before the sort. On a layout clustered by (predicate,
+    ``value_col``) — range partitioner or z-order — this decodes
+    O(k / chunk_rows + #boundary) chunks of an arbitrarily large table;
+    on an uncorrelated layout every chunk may qualify and it degrades
+    to the plain sort, never worse. ``extra_order`` appends
+    deterministic tie-break columns; ``columns`` projects the decode
+    (must include ``value_col``'s top-level field, the predicate
+    columns, and the tie-breaks). int/float columns only: the tau
+    literal re-enters ``value_range`` as a plain number, which the
     temporal/decimal specs reject by design.
     """
-    t, expr = _topk_check_args("topk_table", out_schema, value_col, k)
-    # pin an in-flight encode lineage ONCE: threshold gate + cum +
-    # decode otherwise re-run the encode, and a nondeterministic range
-    # sampler would desync the tau metadata from the decoded chunks
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-    vr = _topk_threshold(manifest_df, value_col, k, descending,
-                         need_hist=pa.types.is_floating(t))
-    out = decode_table(manifest_df, out_schema, columns=columns,
-                       value_range=vr)
-    return _topk_exact_tail(out, expr, pa.types.is_floating(t),
-                            descending, extra_order, k)
+    return _topk(_Snapshot.of_manifest(manifest_df, out_schema),
+                 "topk_table", value_col, k, where, where_in, descending,
+                 columns, extra_order)
+
+
+def topk_checkpoint(spark, ckpt_dir: str, value_col: str, k: int,
+                    out_schema=None, descending: bool = True,
+                    columns=None, extra_order=(), as_of=None,
+                    where=None, where_in=None):
+    """``topk_table`` over a PERSISTED checkpoint: the leaderboard query
+    on a table that lives on disk. tau and the predicate classes come
+    from the checkpoint's own metadata columns (a parquet projection —
+    the blob column is never materialized). Unfiltered, the decode
+    rides ``decode_checkpoint(value_range=...)``'s two-level prune:
+    whole FILES via the driver-side metadata pass, chunks inside each
+    file via the per-file qualifying-key list. Filtered, the non-'out'
+    chunks whose extreme reaches tau ride
+    ``decode_checkpoint(_restrict_chunks=…)``: only those chunks'
+    files open; past VALUE_PRUNE_MAX_KEYS surviving chunks one
+    tau-pruned decode answers (same rows). The read side stays
+    zero-Exchange — the only post-decode plan node is
+    TakeOrderedAndProject.
+
+    ``out_schema=None`` resolves the ``_table_schema`` sidecar like
+    ``decode_checkpoint``; ``as_of`` restricts both the metadata and
+    the decode to the files visible at that commit (deletion sidecars
+    in the window are applied by the decode)."""
+    return _topk(_Snapshot.of_checkpoint(spark, ckpt_dir, out_schema, as_of),
+                 "topk_checkpoint", value_col, k, where, where_in,
+                 descending, columns, extra_order)
+
+
+def _topk(snap, fn, value_col, k, where, where_in, descending, columns,
+          extra_order):
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    t, expr = _topk_check_args(fn, snap.schema, value_col, k)
+    pred = _where_parse(snap.schema, where, where_in, fn, required=False)
+    if (pred is not None and not pred.satisfiable) or snap.frame is None:
+        proj_schema, _ = _project_out_schema(snap.schema, columns)
+        return snap.spark.createDataFrame(
+            [], from_arrow_schema(proj_schema, prefer_timestamp_ntz=True))
+    floating = pa.types.is_floating(t)
+    cls = keep = None
+    if pred is not None:
+        cls = _count_where_classify(snap.frame, snap.schema, pred.specs,
+                                    pred.in_specs)
+        keep = cls.filter(F.col("__cls") != "out").select("chunk_key")
+    vr = _topk_threshold(snap.frame, value_col, k, descending, floating, cls)
+    if keep is not None and vr is not None:
+        # zone-reach on the ranked column: chunks whose widened extreme
+        # cannot reach tau drop; NULL maps and chunks missing the
+        # column's row keep conservatively (left join + coalesce)
+        _, lo, hi = vr
+        vb = (_stats_base(snap.frame).filter(F.col("column") == value_col)
+              .select("chunk_key",
+                      F.col("val_min").alias("__zlo"),
+                      F.col("val_max").alias("__zhi")))
+        reach = (F.col("__zhi").isNull() | (F.col("__zhi") >= F.lit(lo))
+                 if descending else
+                 F.col("__zlo").isNull() | (F.col("__zlo") <= F.lit(hi)))
+        keep = (keep.join(vb, "chunk_key", "left")
+                .filter(F.coalesce(reach, F.lit(True)))
+                .select("chunk_key"))
+    out, _ = snap.decode(columns, keep, value_range=vr,
+                         value_in=pred.value_in if pred else None)
+    if pred is not None:
+        out = out.filter(pred.cond)
+    return _topk_exact_tail(out, expr, floating, descending, extra_order, k)
 
 
 def _topk_check_args(fn: str, out_schema, value_col: str, k: int):
@@ -9158,226 +9378,6 @@ def _topk_exact_tail(out, expr, floating: bool, descending: bool,
     order = [expr.desc() if descending else expr.asc()]
     order += [F.col(c) for c in extra_order]
     return out.orderBy(*order).limit(k)
-
-
-def _topk_threshold_where(manifest_df, cls, value_col, k: int,
-                          descending: bool, need_hist: bool):
-    """Certified tau for ``topk_where``: only chunks the predicate
-    classifier marks 'in' can count toward "at least k predicate-
-    satisfying values are certainly >= tau" (a 'dec' chunk's rows may
-    fail the predicate, so its n_values certifies nothing). The ranked
-    column's own soundness rules still apply: nullable → no tau
-    (fillers ride the maps); float chunks without a full histogram
-    drop from the accumulation (NaN rows never rank) — every drop only
-    LOWERS the certified tau, i.e. decodes more. Returns a
-    ``value_range`` spec or None (no certification — caller decodes
-    every non-'out' chunk)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    if "val_min" not in manifest_df.columns:
-        return None
-    if _nullable_columns(manifest_df).filter(
-            F.col("column_name") == value_col).count():
-        return None
-    base = (
-        _stats_base(manifest_df)
-        .filter(F.col("column") == value_col)
-        .join(cls.filter(F.col("__cls") == "in").select("chunk_key"),
-              "chunk_key", "left_semi")
-        .filter(F.col("val_min").isNotNull())
-    )
-    if need_hist:
-        if "val_hist" not in manifest_df.columns:
-            return None
-        base = base.filter(F.col("val_hist").isNotNull())
-    bound = F.col("val_min") if descending else F.col("val_max")
-    cum = (
-        base.groupBy(bound.alias("b"))
-        .agg(F.sum("n_values").alias("cnt"))
-        .withColumn("cum", F.sum("cnt").over(
-            Window.orderBy(
-                F.col("b").desc() if descending else F.col("b").asc()
-            ).rowsBetween(Window.unboundedPreceding, 0)))
-    )
-    agg = (F.max("b") if descending else F.min("b"))
-    tau = cum.filter(F.col("cum") >= k).agg(agg).collect()[0][0]
-    if tau is None:
-        return None
-    return ((value_col, float(tau), float("inf")) if descending
-            else (value_col, float("-inf"), float(tau)))
-
-
-def topk_where(manifest_df, out_schema, value_col: str, k: int,
-               where=None, where_in=None, descending: bool = True,
-               columns=None, extra_order=()):
-    """TOP-K within a slice: the ``k`` rows with the largest (or
-    smallest) non-null ``value_col`` AMONG the rows satisfying
-    ``where``/``where_in`` — ``SELECT ... WHERE ... ORDER BY v LIMIT
-    k``, the filtered-leaderboard shape. Composes the two prunes:
-    chunks the predicate classifier proves 'out' never open; the
-    certified tau accumulates over 'in' chunks only (only their rows
-    certainly satisfy the predicate, see ``_topk_threshold_where``)
-    and the value zone maps then exclude every remaining chunk whose
-    extreme cannot reach tau. The decode applies the exact predicate
-    filters and an exact ORDER BY ... LIMIT k finishes
-    (TakeOrderedAndProject). On a layout clustered by (predicate,
-    value) a 100 TB sliced leaderboard opens O(k / chunk_rows + #
-    boundary) chunks; certification degrades to decoding every
-    non-'out' chunk, never lies. ``columns=`` must include the
-    predicate columns, ``value_col``'s top-level field, and the
-    tie-breaks (same contract as ``topk_table``)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-
-    schema = (out_schema if isinstance(out_schema, pa.Schema)
-              else to_arrow_schema(out_schema))
-    t, expr = _topk_check_args("topk_where", schema, value_col, k)
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError("topk_where needs where= and/or where_in= — "
-                         "for the unfiltered leaderboard use topk_table")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    if not satisfiable:
-        proj_schema, _ = _project_out_schema(schema, columns)
-        return manifest_df.sparkSession.createDataFrame(
-            [], from_arrow_schema(proj_schema, prefer_timestamp_ntz=True))
-    # pin an in-flight encode lineage ONCE (see count_where); also
-    # saves the 3-4 re-evaluations the classifier + tau + decode cost
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-    cls = _count_where_classify(manifest_df, schema, specs, in_specs)
-    out_keys = cls.filter(F.col("__cls") == "out").select("chunk_key")
-    m2 = manifest_df.join(out_keys, "chunk_key", "left_anti")
-    vr = _topk_threshold_where(manifest_df, cls, value_col, k,
-                               descending,
-                               need_hist=pa.types.is_floating(t))
-    dec = decode_table(m2, schema, columns=columns, value_range=vr)
-    dec = dec.filter(cond)
-    return _topk_exact_tail(dec, expr, pa.types.is_floating(t),
-                            descending, extra_order, k)
-
-
-def topk_checkpoint(spark, ckpt_dir: str, value_col: str, k: int,
-                    out_schema=None, descending: bool = True,
-                    columns=None, extra_order=(), as_of=None):
-    """``topk_table`` over a PERSISTED checkpoint: the leaderboard query
-    on a table that lives on disk, reading only the manifest files the
-    certified zone-map threshold cannot exclude. The threshold is
-    computed from the checkpoint's own metadata columns (a parquet
-    projection of ``val_min``/``val_max``/``n_values`` — the blob column
-    is never materialized), and the decode rides
-    ``decode_checkpoint(value_range=...)``'s two-level prune: whole
-    FILES via the driver-side metadata pass, chunks inside each file via
-    the per-file qualifying-key list. The read side stays zero-Exchange
-    — the only post-decode plan node is TakeOrderedAndProject.
-
-    At 100 TB on a layout clustered by ``value_col`` this opens
-    O(k / chunk_rows) chunks' worth of files; certification degrades
-    exactly as ``topk_table`` documents (nullable / deletion-masked /
-    histogram-less float / legacy / k >= n → full decode + exact sort,
-    same rows). ``out_schema=None`` resolves the ``_table_schema``
-    sidecar like ``decode_checkpoint``; ``as_of`` restricts BOTH the
-    threshold metadata and the decode to the files visible at that
-    commit (deletion sidecars in the window flip the column to
-    degraded — the masks are applied by the decode, so the fallback is
-    still exact)."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity import)
-
-    if out_schema is None:
-        out_schema = read_checkpoint_schema(ckpt_dir)
-        if out_schema is None:
-            raise ValueError(
-                f"checkpoint {ckpt_dir!r} carries no _table_schema "
-                "sidecar — pass out_schema=, or persist with "
-                "write_checkpoint(manifest, dir, schema=...)")
-    t, expr = _topk_check_args("topk_checkpoint", out_schema, value_col, k)
-
-    if as_of is not None:
-        allowed = _files_as_of(ckpt_dir, as_of)
-        mdf = (spark.read.parquet(
-                   *[f"{ckpt_dir.rstrip('/')}/{b}" for b in allowed])
-               if allowed else None)
-    else:
-        mdf = spark.read.parquet(ckpt_dir)
-    vr = (None if mdf is None else
-          _topk_threshold(mdf, value_col, k, descending,
-                          need_hist=pa.types.is_floating(t)))
-    out = decode_checkpoint(spark, ckpt_dir, out_schema, columns=columns,
-                            value_range=vr, as_of=as_of)
-    return _topk_exact_tail(out, expr, pa.types.is_floating(t),
-                            descending, extra_order, k)
-
-
-def topk_where_checkpoint(spark, ckpt_dir: str, value_col: str, k: int,
-                          where=None, where_in=None, out_schema=None,
-                          descending: bool = True, columns=None,
-                          extra_order=(), as_of=None):
-    """``topk_where`` over a PERSISTED checkpoint: the filtered
-    leaderboard on disk. Both prune dimensions come from a blob-free
-    metadata projection — the predicate classifier names the chunks
-    that can hold satisfying rows, the 'in'-accumulated tau names the
-    chunks whose values can reach the answer — and their intersection
-    rides ``decode_checkpoint(_restrict_chunks=…)``'s zero-Exchange
-    per-file reader: only those chunks' files open. Past
-    VALUE_PRUNE_MAX_KEYS surviving chunks the restriction drops and
-    one tau-pruned decode answers (same rows). Degrades exactly as
-    ``topk_where`` documents; ``as_of`` composes."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    _raise_if_pending(ckpt_dir)
-    schema = _where_ckpt_schema(ckpt_dir, out_schema)
-    t, expr = _topk_check_args("topk_where_checkpoint", schema,
-                               value_col, k)
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError(
-            "topk_where_checkpoint needs where= and/or where_in= — for "
-            "the unfiltered leaderboard use topk_checkpoint")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    mdf = (_ckpt_manifest_frame(spark, ckpt_dir, as_of)
-           if satisfiable else None)
-    if mdf is None:
-        proj_schema, _ = _project_out_schema(schema, columns)
-        return spark.createDataFrame(
-            [], from_arrow_schema(proj_schema, prefer_timestamp_ntz=True))
-    cls = _count_where_classify(mdf, schema, specs, in_specs)
-    vr = _topk_threshold_where(mdf, cls, value_col, k, descending,
-                               need_hist=pa.types.is_floating(t))
-    keep = cls.filter(F.col("__cls") != "out").select("chunk_key")
-    if vr is not None:
-        # zone-reach on the ranked column: chunks whose widened extreme
-        # cannot reach tau drop; NULL maps and chunks missing the
-        # column's row keep conservatively (left join + coalesce)
-        _, lo, hi = vr
-        vb = (_stats_base(mdf).filter(F.col("column") == value_col)
-              .select("chunk_key",
-                      F.col("val_min").alias("__zlo"),
-                      F.col("val_max").alias("__zhi")))
-        reach = (F.col("__zhi").isNull() | (F.col("__zhi") >= F.lit(lo))
-                 if descending else
-                 F.col("__zlo").isNull() | (F.col("__zlo") <= F.lit(hi)))
-        keep = (keep.join(vb, "chunk_key", "left")
-                .filter(F.coalesce(reach, F.lit(True)))
-                .select("chunk_key"))
-    restrict = _collect_chunk_files(mdf, keep)
-    if restrict is None:  # over cap: tau-pruned full pass, same rows
-        dec = decode_checkpoint(spark, ckpt_dir, schema, columns=columns,
-                                value_range=vr,
-                                value_in=_vi_arg(in_specs), as_of=as_of)
-    else:
-        dec = decode_checkpoint(spark, ckpt_dir, schema, columns=columns,
-                                as_of=as_of, _restrict_chunks=restrict)
-    dec = dec.filter(cond)
-    return _topk_exact_tail(dec, expr, pa.types.is_floating(t),
-                            descending, extra_order, k)
 
 
 def _f_le(x):
@@ -9584,53 +9584,57 @@ def count_where(manifest_df, out_schema, where=None, where_in=None):
     to the decode side (see ``_count_where_classify``), and the
     decoded boundary chunks apply plain exact BETWEEN/IN filters
     (integer range bounds are ceil/floor-snapped so an int column
-    never compares through a lossy double cast). The decode side
-    deliberately skips ``decode_table(value_range=...)``: the
-    classifier already names the exact chunk set, so the zone-prune's
-    eager hit-key collection jobs would be pure overhead."""
+    never compares through a lossy double cast)."""
+    return _count_where(_Snapshot.of_manifest(manifest_df, out_schema),
+                        "count_where", where, where_in)
+
+
+def count_where_checkpoint(spark, ckpt_dir: str, where=None,
+                           out_schema=None, as_of=None, where_in=None):
+    """``count_where`` over a PERSISTED checkpoint: the metadata side
+    reads a blob-free parquet projection of the checkpoint's own
+    manifest columns, and only the boundary chunks' files are opened —
+    through ``decode_checkpoint``'s zero-Exchange per-file reader with
+    an explicit chunk restriction, so a 100 TB clustered count touches
+    O(#boundary) chunks of disk. Past VALUE_PRUNE_MAX_KEYS boundary
+    chunks the hybrid split is dropped and one exact
+    ``value_range``-pruned decode answers (same number, no driver
+    blow-up). ``as_of`` restricts both sides to the files visible at
+    that commit. ``out_schema=None`` resolves the ``_table_schema``
+    sidecar."""
+    return _count_where(
+        _Snapshot.of_checkpoint(spark, ckpt_dir, out_schema, as_of),
+        "count_where_checkpoint", where, where_in)
+
+
+def _count_where(snap, fn, where, where_in):
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = (out_schema if isinstance(out_schema, pa.Schema)
-              else to_arrow_schema(out_schema))
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError("count_where needs where= and/or where_in=")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    if not satisfiable:
-        return (manifest_df.sparkSession.range(1)
-                .select(F.lit(0).cast("long").alias("n_rows")))
-
-    # pin an in-flight encode lineage ONCE: the classifier and the
-    # decode below re-evaluate the manifest, and the default range
-    # partitioner's sampler is nondeterministic — drifted chunk
-    # boundaries would silently desync the semi-joined chunk_keys
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-    cls = _count_where_classify(manifest_df, schema, specs, in_specs)
-    meta = (cls.filter(F.col("__cls") == "in")
-            .agg(F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows")))
-    dec_keys = cls.filter(F.col("__cls") == "dec").select("chunk_key")
-    dec_manifest = manifest_df.join(dec_keys, "chunk_key", "left_semi")
-    proj = _anchor_proj(schema, sorted(
-        {s[0].split("#", 1)[0] for s in specs}
-        | {s[0].split("#", 1)[0] for s in in_specs}))
-    dec = (decode_table(dec_manifest, schema, columns=proj)
-           .filter(cond).agg(F.count(F.lit(1)).alias("n_rows")))
-    return (meta.unionByName(dec)
-            .agg(F.sum("n_rows").cast("long").alias("n_rows")))
+    pred = _where_parse(snap.schema, where, where_in, fn)
+    if not pred.satisfiable or snap.frame is None:
+        return snap.spark.range(1).select(
+            F.lit(0).cast("long").alias("n_rows"))
+    cls = _count_where_classify(snap.frame, snap.schema, pred.specs,
+                                pred.in_specs)
+    dec, split = snap.decode(
+        _anchor_proj(snap.schema, sorted(pred.cols)),
+        keep=cls.filter(F.col("__cls") == "dec").select("chunk_key"),
+        value_range=pred.value_range, value_in=pred.value_in)
+    n = dec.filter(pred.cond).agg(F.count(F.lit(1)).alias("n_rows"))
+    if split:
+        n = (cls.filter(F.col("__cls") == "in")
+             .agg(F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows"))
+             .unionByName(n))
+    return n.agg(F.sum("n_rows").cast("long").alias("n_rows"))
 
 
 def explain_where(manifest_df, out_schema, where=None, where_in=None):
     """Pushdown PLAN REPORT for the hybrid predicate family: one row
     per chunk class — ``('in' | 'out' | 'dec', n_chunks, n_rows,
     bytes_out)`` — showing how ``count_where`` / ``sum_where`` /
-    ``group_*_where`` / ``topk_where`` would route these predicates,
-    WITHOUT running the query. Blob-free metadata only; nothing
-    decodes. The 100 TB ops loop: verify a supposedly clustered
+    ``group_sums`` / ``group_stats`` / ``topk_table`` would route these
+    predicates, WITHOUT running the query. Blob-free metadata only;
+    nothing decodes. The 100 TB ops loop: verify a supposedly clustered
     predicate routes to 'in'/'out' BEFORE paying for the scan — a
     layout regression (re-ingest without sorting, a new unclustered
     source) shows up here as a 'dec' byte explosion, not as a mystery
@@ -9647,17 +9651,10 @@ def explain_where(manifest_df, out_schema, where=None, where_in=None):
     ``where_in=(col, [values])`` IN-lists, one or lists, AND-combined.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = (out_schema if isinstance(out_schema, pa.Schema)
-              else to_arrow_schema(out_schema))
-    specs, _, satisfiable = _where_specs(schema, where)
-    in_specs, _, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError("explain_where needs where= and/or where_in=")
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
+    snap = _Snapshot.of_manifest(manifest_df, out_schema)
+    pred = _where_parse(snap.schema, where, where_in, "explain_where")
+    manifest_df = snap.frame
     sizes = (
         manifest_df.filter(
             (F.col("column") != DONE_COLUMN)
@@ -9676,12 +9673,13 @@ def explain_where(manifest_df, out_schema, where=None, where_in=None):
              F.max(F.when(~F.col("column").endswith("#values"),
                           F.col("n_values"))).alias("__rows"))
     )
-    if not satisfiable:
+    if not pred.satisfiable:
         cls = sizes.select(
             "chunk_key", F.lit("out").alias("__cls"),
             F.lit(0).cast("long").alias("__n"))
     else:
-        cls = _count_where_classify(manifest_df, schema, specs, in_specs)
+        cls = _count_where_classify(manifest_df, snap.schema, pred.specs,
+                                    pred.in_specs)
     return (
         cls.join(sizes, "chunk_key", "left")
         .groupBy(F.col("__cls").alias("cls"))
@@ -9834,46 +9832,51 @@ def sum_where(manifest_df, out_schema, sum_col, where=None,
     contribute their ``#valid``-masked sum — zero fillers are additive
     identity) and returns NULL when no non-null value qualifies;
     ``avg_val = sum_val / n_nonnull``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
+    return _sum_where(_Snapshot.of_manifest(manifest_df, out_schema),
+                      "sum_where", sum_col, where, where_in)
 
-    schema = (out_schema if isinstance(out_schema, pa.Schema)
-              else to_arrow_schema(out_schema))
-    st, sexpr = _resolve_value_field(schema, sum_col)
+
+def sum_where_checkpoint(spark, ckpt_dir: str, sum_col: str, where=None,
+                         out_schema=None, as_of=None, where_in=None):
+    """``sum_where`` over a PERSISTED checkpoint: exact per-chunk
+    integer sums and ``#valid`` counts come from the blob-free
+    manifest projection; boundary and metadata-refused chunks decode
+    through the zero-Exchange per-file reader restricted to exactly
+    those chunks. Same output shape and SQL semantics as ``sum_where``;
+    same over-cap degrade as ``count_where_checkpoint`` (one exact
+    pruned decode)."""
+    return _sum_where(
+        _Snapshot.of_checkpoint(spark, ckpt_dir, out_schema, as_of),
+        "sum_where_checkpoint", sum_col, where, where_in)
+
+
+def _sum_where(snap, fn, sum_col, where, where_in):
+    from pyspark.sql import functions as F
+
+    st, sexpr = _resolve_value_field(snap.schema, sum_col)
     if not pa.types.is_integer(st):
         raise TypeError(
-            f"sum_where sums INTEGER columns (exact, order-independent);"
+            f"{fn} sums INTEGER columns (exact, order-independent);"
             f" {sum_col!r} is {st} — decode and sum explicitly")
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError("sum_where needs where= and/or where_in=")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    empty = (F.lit(0).cast("long").alias("n_rows"),
-             F.lit(0).cast("long").alias("n_nonnull"),
-             F.lit(None).cast("decimal(38,0)").alias("sum_val"),
-             F.lit(None).cast("double").alias("avg_val"))
-    if not satisfiable:
-        return manifest_df.sparkSession.range(1).select(*empty)
-
-    # pin an in-flight encode lineage ONCE (see count_where)
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-    cls = _count_where_classify(manifest_df, schema, specs, in_specs)
-    d, meta_ok = _sum_meta_frame(manifest_df, cls, sum_col)
-    meta = _sum_meta_agg(d, meta_ok)
-    dec_keys = (d.filter(~meta_ok & (F.col("__cls") != "out"))
-                .select("chunk_key"))
-    dec_manifest = manifest_df.join(dec_keys, "chunk_key", "left_semi")
-    proj = _anchor_proj(schema, sorted(
-        {s[0].split("#", 1)[0] for s in specs}
-        | {s[0].split("#", 1)[0] for s in in_specs}
-        | {sum_col.split("#", 1)[0]}))
-    dec = _sum_dec_agg(
-        decode_table(dec_manifest, schema, columns=proj), cond, sexpr)
-    return _sum_finish(meta.unionByName(dec))
+    pred = _where_parse(snap.schema, where, where_in, fn)
+    if not pred.satisfiable or snap.frame is None:
+        return snap.spark.range(1).select(
+            F.lit(0).cast("long").alias("n_rows"),
+            F.lit(0).cast("long").alias("n_nonnull"),
+            F.lit(None).cast("decimal(38,0)").alias("sum_val"),
+            F.lit(None).cast("double").alias("avg_val"))
+    cls = _count_where_classify(snap.frame, snap.schema, pred.specs,
+                                pred.in_specs)
+    d, meta_ok = _sum_meta_frame(snap.frame, cls, sum_col)
+    dec, split = snap.decode(
+        _anchor_proj(snap.schema,
+                     sorted(pred.cols | {sum_col.split("#", 1)[0]})),
+        keep=d.filter(~meta_ok & (F.col("__cls") != "out"))
+        .select("chunk_key"),
+        value_range=pred.value_range, value_in=pred.value_in)
+    dec = _sum_dec_agg(dec, pred.cond, sexpr)
+    return _sum_finish(_sum_meta_agg(d, meta_ok).unionByName(dec)
+                       if split else dec)
 
 
 def _sum_meta_frame(manifest_df, cls, sum_col):
@@ -9946,33 +9949,6 @@ def _sum_finish(frames):
             .alias("avg_val")))
 
 
-def _where_ckpt_schema(ckpt_dir: str, out_schema):
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if out_schema is None:
-        out_schema = read_checkpoint_schema(ckpt_dir)
-        if out_schema is None:
-            raise ValueError(
-                f"checkpoint {ckpt_dir!r} carries no _table_schema "
-                "sidecar — pass out_schema=, or persist with "
-                "write_checkpoint(manifest, dir, schema=...)")
-    return (out_schema if isinstance(out_schema, pa.Schema)
-            else to_arrow_schema(out_schema))
-
-
-def _ckpt_manifest_frame(spark, ckpt_dir: str, as_of):
-    """The checkpoint's manifest frame, as_of-restricted; None for an
-    empty snapshot. Callers select metadata columns only — parquet
-    column pruning keeps the blob bytes unread."""
-    if as_of is not None:
-        allowed = _files_as_of(ckpt_dir, as_of)
-        if not allowed:
-            return None
-        return spark.read.parquet(
-            *[f"{ckpt_dir.rstrip('/')}/{b}" for b in allowed])
-    return spark.read.parquet(ckpt_dir)
-
-
 def _collect_chunk_files(mdf, keys_df, cap=None):
     """``{file: [chunk_key, ...]}`` for the chunks named by ``keys_df``,
     or None past ``cap`` (default VALUE_PRUNE_MAX_KEYS, read at call
@@ -10002,133 +9978,6 @@ def _collect_chunk_files(mdf, keys_df, cap=None):
     for r in rows:
         out.setdefault(r["__file"], []).append(r["chunk_key"])
     return out
-
-
-def count_where_checkpoint(spark, ckpt_dir: str, where=None,
-                           out_schema=None, as_of=None, where_in=None):
-    """``count_where`` over a PERSISTED checkpoint: the metadata side
-    reads a blob-free parquet projection of the checkpoint's own
-    manifest columns, and only the boundary chunks' files are opened —
-    through ``decode_checkpoint``'s zero-Exchange per-file reader with
-    an explicit chunk restriction, so a 100 TB clustered count touches
-    O(#boundary) chunks of disk. Past VALUE_PRUNE_MAX_KEYS boundary
-    chunks the hybrid split is dropped and one exact
-    ``value_range``-pruned decode answers (same number, no driver
-    blow-up). ``as_of`` restricts both sides to the files visible at
-    that commit. ``out_schema=None`` resolves the ``_table_schema``
-    sidecar."""
-    from pyspark.sql import functions as F
-
-    _raise_if_pending(ckpt_dir)
-    schema = _where_ckpt_schema(ckpt_dir, out_schema)
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError(
-            "count_where_checkpoint needs where= and/or where_in=")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    zero = spark.range(1).select(F.lit(0).cast("long").alias("n_rows"))
-    if not satisfiable:
-        return zero
-    mdf = _ckpt_manifest_frame(spark, ckpt_dir, as_of)
-    if mdf is None:
-        return zero
-    cls = _count_where_classify(mdf, schema, specs, in_specs)
-    proj = _anchor_proj(schema, sorted(
-        {s[0].split("#", 1)[0] for s in specs}
-        | {s[0].split("#", 1)[0] for s in in_specs}))
-    restrict = _collect_chunk_files(
-        mdf, cls.filter(F.col("__cls") == "dec"))
-    if restrict is None:  # over cap: one exact pruned pass, no split
-        return (decode_checkpoint(
-                    spark, ckpt_dir, schema, columns=proj, as_of=as_of,
-                    value_range=_vr_arg(specs),
-                    value_in=_vi_arg(in_specs))
-                .filter(cond)
-                .agg(F.count(F.lit(1)).cast("long").alias("n_rows")))
-    meta = (cls.filter(F.col("__cls") == "in")
-            .agg(F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows")))
-    dec = (decode_checkpoint(spark, ckpt_dir, schema, columns=proj,
-                             as_of=as_of, _restrict_chunks=restrict)
-           .filter(cond).agg(F.count(F.lit(1)).alias("n_rows")))
-    return (meta.unionByName(dec)
-            .agg(F.sum("n_rows").cast("long").alias("n_rows")))
-
-
-def _vr_arg(specs):
-    """Range specs as a decode ``value_range=`` argument (None/one/
-    list)."""
-    if not specs:
-        return None
-    return specs if len(specs) > 1 else specs[0]
-
-
-def _vi_arg(in_specs):
-    """IN specs as a decode ``value_in=`` argument: the decode paths
-    take at most ONE IN spec — any further lists ride the exact
-    post-filter only (correct, just less pruned)."""
-    if not in_specs:
-        return None
-    return (in_specs[0][0], in_specs[0][1])
-
-
-def sum_where_checkpoint(spark, ckpt_dir: str, sum_col: str, where=None,
-                         out_schema=None, as_of=None, where_in=None):
-    """``sum_where`` over a PERSISTED checkpoint: exact per-chunk
-    integer sums and ``#valid`` counts come from the blob-free
-    manifest projection; boundary and metadata-refused chunks decode
-    through the zero-Exchange per-file reader restricted to exactly
-    those chunks. Same output shape and SQL semantics as ``sum_where``;
-    same over-cap degrade as ``count_where_checkpoint`` (one exact
-    pruned decode)."""
-    from pyspark.sql import functions as F
-
-    _raise_if_pending(ckpt_dir)
-    schema = _where_ckpt_schema(ckpt_dir, out_schema)
-    st, sexpr = _resolve_value_field(schema, sum_col)
-    if not pa.types.is_integer(st):
-        raise TypeError(
-            f"sum_where_checkpoint sums INTEGER columns (exact, order-"
-            f"independent); {sum_col!r} is {st} — decode and sum "
-            "explicitly")
-    specs, cond, satisfiable = _where_specs(schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError(
-            "sum_where_checkpoint needs where= and/or where_in=")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    empty = (F.lit(0).cast("long").alias("n_rows"),
-             F.lit(0).cast("long").alias("n_nonnull"),
-             F.lit(None).cast("decimal(38,0)").alias("sum_val"),
-             F.lit(None).cast("double").alias("avg_val"))
-    mdf = (_ckpt_manifest_frame(spark, ckpt_dir, as_of)
-           if satisfiable else None)
-    if mdf is None:
-        return spark.range(1).select(*empty)
-    cls = _count_where_classify(mdf, schema, specs, in_specs)
-    d, meta_ok = _sum_meta_frame(mdf, cls, sum_col)
-    proj = _anchor_proj(schema, sorted(
-        {s[0].split("#", 1)[0] for s in specs}
-        | {s[0].split("#", 1)[0] for s in in_specs}
-        | {sum_col.split("#", 1)[0]}))
-    restrict = _collect_chunk_files(
-        mdf, d.filter(~meta_ok & (F.col("__cls") != "out")))
-    if restrict is None:  # over cap: one exact pruned pass, no split
-        return _sum_finish(_sum_dec_agg(
-            decode_checkpoint(
-                spark, ckpt_dir, schema, columns=proj, as_of=as_of,
-                value_range=_vr_arg(specs), value_in=_vi_arg(in_specs)),
-            cond, sexpr))
-    meta = _sum_meta_agg(d, meta_ok)
-    dec = _sum_dec_agg(
-        decode_checkpoint(spark, ckpt_dir, schema, columns=proj,
-                          as_of=as_of, _restrict_chunks=restrict),
-        cond, sexpr)
-    return _sum_finish(meta.unionByName(dec))
 
 
 # ---------------------------------------------------------------------------
@@ -10190,24 +10039,28 @@ def _group_pure_cond(t: pa.DataType):
 
 def _grouped_split(manifest_df, out_schema, group_col, value_col,
                    value_cond, value_cols, nullable_value_ok=True,
-                   pin=True):
+                   where=None):
     """Shared scaffolding for the grouped pushdowns: classify every
     chunk as PURE (group constant by zone map, value stats usable,
     no nulls in the group, no deletion mask) or MIXED, and return
 
-    ``(pure, mixed_manifest, spark_g_type, out_schema)``
+    ``(pure, keep, spark_g_type)``
 
     where ``pure`` carries one row per pure chunk with ``__grp_raw``
-    plus the requested ``value_cols`` (renamed ``__v_<name>``), and
-    ``mixed_manifest`` is the manifest restricted to chunks that must
-    decode. Physical column names (like ``column_sums``: a renamed
-    checkpoint's manifest speaks pre-rename names until compaction).
+    plus the requested ``value_cols`` (renamed ``__v_<name>``), or is
+    None when the group type has no exact metadata form, and ``keep``
+    is the ``chunk_key`` frame of the chunks that must decode. A parsed
+    predicate ``where`` (``_where_parse``) composes the ``count_where``
+    classification: ``pure`` narrows to the chunks proven fully INSIDE
+    every predicate (their metadata rows answer for ALL their rows)
+    and chunks provably outside drop out of ``keep``. Physical column
+    names (like ``column_sums``: a renamed checkpoint's manifest speaks
+    pre-rename names until compaction). The caller pins the manifest
+    (``_Snapshot``).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    if not isinstance(out_schema, pa.Schema):
-        out_schema = to_arrow_schema(out_schema)
     for c in (group_col, value_col):
         if "#" in c:
             raise ValueError(
@@ -10215,6 +10068,8 @@ def _grouped_split(manifest_df, out_schema, group_col, value_col,
     g_field = out_schema.field(group_col)
     spark_g_type = from_arrow_schema(
         pa.schema([g_field]), prefer_timestamp_ntz=True)[0].dataType
+    cls = (None if where is None else _count_where_classify(
+        manifest_df, out_schema, where.specs, where.in_specs))
 
     # older manifests may predate some stat columns: surface them as
     # NULLs so every chunk simply classifies as mixed
@@ -10224,21 +10079,12 @@ def _grouped_split(manifest_df, out_schema, group_col, value_col,
         if c not in manifest_df.columns:
             manifest_df = manifest_df.withColumn(c, F.lit(None).cast(t))
 
-    # the classification + decode below re-evaluate the manifest: pin
-    # an in-flight encode lineage once (persisted manifests re-scan
-    # for pennies and skip this; pin=False when the caller already
-    # pinned — a localCheckpoint plan reads as LogicalRDD, which
-    # _cheap_rescan can't certify, and double-pinning would copy every
-    # blob into executor storage twice)
-    if pin and not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-
     body = manifest_df.filter(
         (F.col("column") != DONE_COLUMN)
         & ~F.col("column").startswith(DELETES_PREFIX)
     )
     meta = body.dropDuplicates(["chunk_key", "column"]).drop("blob")
-    universe = body.select("chunk_key").distinct()
+    keep = body.select("chunk_key").distinct()
     deleted = (
         manifest_df.filter(F.col("column").startswith(DELETES_PREFIX))
         .select("chunk_key").distinct()
@@ -10282,17 +10128,18 @@ def _grouped_split(manifest_df, out_schema, group_col, value_col,
             # value-column nulls store filler values that pollute
             # extremes: any masked chunk decodes
             pure = pure.filter(F.col("__has_mask").isNull())
+        if cls is not None:
+            pure = pure.join(cls.filter(F.col("__cls") == "in"),
+                             "chunk_key", "left_semi")
+        keep = keep.join(pure.select("chunk_key"), "chunk_key", "left_anti")
+    if cls is not None:
+        keep = keep.join(cls.filter(F.col("__cls") == "out"),
+                         "chunk_key", "left_anti")
+    return pure, keep, spark_g_type
 
-    if pure is None:
-        mixed = universe
-    else:
-        mixed = universe.join(
-            pure.select("chunk_key"), "chunk_key", "left_anti")
-    mixed_manifest = manifest_df.join(mixed, "chunk_key", "left_semi")
-    return pure, mixed_manifest, spark_g_type, out_schema
 
-
-def group_sums(manifest_df, out_schema, group_col, value_col):
+def group_sums(manifest_df, out_schema, group_col, value_col, where=None,
+               where_in=None):
     """GROUP BY pushdown: ``SELECT group_col, SUM(value_col), COUNT(*),
     COUNT(value_col) GROUP BY group_col`` answered hybrid — group-pure
     chunks (zone map min == max) straight from manifest metadata
@@ -10310,75 +10157,52 @@ def group_sums(manifest_df, out_schema, group_col, value_col):
     order-independence rule as ``column_sums`` (a float SUM is
     order-dependent rounding; no metadata sum can match it exactly).
 
-    On a layout clustered by ``group_col`` (range/z-order encode) all
-    but the partition-boundary chunks are pure: at 10^12 rows the
-    decode side is ~one chunk per partition while the metadata side is
-    a blob-free groupBy of the manifest."""
+    ``where``/``where_in`` (``count_where``'s grammar) make it the
+    sliced rollup ``... WHERE <predicates> GROUP BY group_col``
+    (revenue per source inside a time/value band): a chunk answers
+    from metadata only when it is group-pure AND the classifier proves
+    every one of its rows inside every predicate; chunks provably
+    outside contribute nothing; everything else decodes with the exact
+    filter.
+
+    On a layout clustered by ``group_col`` (range/z-order encode; by
+    (group_col, predicate col) when filtered) all but the
+    partition-boundary chunks are pure: at 10^12 rows the decode side
+    is ~one chunk per partition while the metadata side is a blob-free
+    groupBy of the manifest."""
     from pyspark.sql import functions as F
 
-    if not isinstance(out_schema, pa.Schema):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(out_schema)
-    v_field = out_schema.field(value_col)
-    if not (pa.types.is_integer(v_field.type)
-            or pa.types.is_boolean(v_field.type)):
+    snap = _Snapshot.of_manifest(manifest_df, out_schema)
+    t = snap.schema.field(value_col).type
+    if not (pa.types.is_integer(t) or pa.types.is_boolean(t)):
         raise TypeError(
             f"group_sums value column must be integer/boolean, got "
-            f"{value_col!r}: {v_field.type} (float sums are order-"
-            "dependent — decode and aggregate instead)")
-
-    pure, mixed_manifest, g_type, out_schema = _grouped_split(
-        manifest_df, out_schema, group_col, value_col,
+            f"{value_col!r}: {t} (float sums are order-dependent — "
+            "decode and aggregate instead)")
+    v = F.col(value_col).cast("long") if pa.types.is_boolean(t) \
+        else F.col(value_col)
+    return _grouped(
+        snap, "group_sums", group_col, value_col, where, where_in,
+        out=[("v_sum", "decimal(38,0)"), ("n_rows", "long"),
+             ("n_nonnull", "long")],
+        meta=[F.sum("__v_val_sum"), F.sum("__v_n_values"),
+              F.sum(F.coalesce("__mask_sum", "__v_n_values"))],
+        dec=[F.sum(v.cast("decimal(38,0)")), F.count(F.lit(1)),
+             F.count(value_col)],
+        merge=[F.sum, F.sum, F.sum],
         value_cond=F.col("val_sum").isNotNull(),
-        value_cols=["val_sum", "n_values"],
-    )
-
-    sides = []
-    if pure is not None:
-        meta_side = (
-            pure.withColumn(
-                "__nnn", F.coalesce("__mask_sum", F.col("__v_n_values")))
-            .groupBy("__grp_raw")
-            .agg(F.sum("__v_val_sum").alias("v_sum"),
-                 F.sum("__v_n_values").alias("n_rows"),
-                 F.sum("__nnn").alias("n_nonnull"))
-            .select(F.col("__grp_raw").cast(g_type).alias(group_col),
-                    F.col("v_sum").cast("decimal(38,0)").alias("v_sum"),
-                    F.col("n_rows").cast("long").alias("n_rows"),
-                    F.col("n_nonnull").cast("long").alias("n_nonnull"))
-        )
-        sides.append(meta_side)
-
-    v = F.col(value_col)
-    if pa.types.is_boolean(v_field.type):
-        v = v.cast("long")
-    dec = decode_table(mixed_manifest, out_schema,
-                       columns=[group_col, value_col])
-    sides.append(
-        dec.groupBy(group_col)
-        .agg(F.sum(v.cast("decimal(38,0)")).cast("decimal(38,0)")
-             .alias("v_sum"),
-             F.count(F.lit(1)).alias("n_rows"),
-             F.count(value_col).alias("n_nonnull"))
-    )
-    merged = sides[0]
-    for s in sides[1:]:
-        merged = merged.unionByName(s)
-    return (
-        merged.groupBy(group_col)
-        .agg(F.sum("v_sum").cast("decimal(38,0)").alias("v_sum"),
-             F.sum("n_rows").cast("long").alias("n_rows"),
-             F.sum("n_nonnull").cast("long").alias("n_nonnull"))
-    )
+        value_cols=["val_sum", "n_values"])
 
 
-def group_stats(manifest_df, out_schema, group_col, value_col):
+def group_stats(manifest_df, out_schema, group_col, value_col, where=None,
+                where_in=None):
     """GROUP BY pushdown for extremes: ``SELECT group_col,
     MIN(value_col), MAX(value_col), COUNT(*) GROUP BY group_col``
     answered hybrid like ``group_sums`` — group-pure chunks from the
     per-chunk value zone maps (zero blob bytes), mixed chunks via a
-    targeted decode, merged exactly.
+    targeted decode, merged exactly; ``where``/``where_in`` filter the
+    same way (a group-pure 'in' chunk's extremes ARE its satisfying
+    rows' extremes).
 
     Returns ``(group_col, v_min, v_max, n_rows)``. Numeric/boolean
     value columns report double extremes in the zone maps' normalized
@@ -10393,294 +10217,82 @@ def group_stats(manifest_df, out_schema, group_col, value_col):
     decode and aggregate instead)."""
     from pyspark.sql import functions as F
 
-    if not isinstance(out_schema, pa.Schema):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(out_schema)
-    v_field = out_schema.field(value_col)
-    t = v_field.type
-    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    is_float = pa.types.is_floating(t)
-    if is_str:
+    snap = _Snapshot.of_manifest(manifest_df, out_schema)
+    t = snap.schema.field(value_col).type
+    v = F.col(value_col)
+    zone, vt = ("val_min", "val_max"), "double"
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        zone, vt = ("val_min_str", "val_max_str"), "string"
         value_cond = (
             F.col("val_min_str").isNotNull()
             & F.col("val_max_str").isNotNull()
             & (F.length("val_min_str") < F.lit(_STR_BOUND_MAX_CHARS))
             & (F.length("val_max_str") < F.lit(_STR_BOUND_MAX_CHARS))
         )
-        value_cols = ["val_min_str", "val_max_str", "n_values"]
-        lo, hi = "__v_val_min_str", "__v_val_max_str"
     elif pa.types.is_integer(t):
         value_cond = (
             F.col("val_min").isNotNull()
             & (F.abs(F.col("val_min")) <= F.lit(float(2 ** 53)))
             & (F.abs(F.col("val_max")) <= F.lit(float(2 ** 53)))
         )
-        value_cols = ["val_min", "val_max", "n_values"]
-        lo, hi = "__v_val_min", "__v_val_max"
-    elif is_float or pa.types.is_boolean(t):
+        v = v.cast("long").cast("double")
+    elif pa.types.is_floating(t):
         value_cond = F.col("val_min").isNotNull()
-        value_cols = ["val_min", "val_max", "n_values"]
-        lo, hi = "__v_val_min", "__v_val_max"
+        # zone maps exclude NaNs: mirror SQL's finite extremes, NOT
+        # Spark's greatest-value NaN ordering
+        v = F.when(~F.isnan(v), v).cast("double")
+    elif pa.types.is_boolean(t):
+        value_cond = F.col("val_min").isNotNull()
+        v = v.cast("long").cast("double")
     else:
         raise TypeError(
             f"group_stats value column must be numeric/boolean/string, "
             f"got {value_col!r}: {t} — decode and aggregate instead")
+    return _grouped(
+        snap, "group_stats", group_col, value_col, where, where_in,
+        out=[("v_min", vt), ("v_max", vt), ("n_rows", "long")],
+        meta=[F.min(f"__v_{zone[0]}"), F.max(f"__v_{zone[1]}"),
+              F.sum("__v_n_values")],
+        dec=[F.min(v), F.max(v), F.count(F.lit(1))],
+        merge=[F.min, F.max, F.sum],
+        value_cond=value_cond, value_cols=[*zone, "n_values"],
+        nullable_value_ok=False)
 
-    pure, mixed_manifest, g_type, out_schema = _grouped_split(
-        manifest_df, out_schema, group_col, value_col,
-        value_cond=value_cond, value_cols=value_cols,
-        nullable_value_ok=False,
-    )
 
-    sides = []
-    if pure is not None:
-        sides.append(
+def _grouped(snap, fn, group_col, value_col, where, where_in, out, meta,
+             dec, merge, **split_kw):
+    """The body ``group_sums`` and ``group_stats`` share: ``out`` lists
+    the ``(name, type)`` result columns, ``meta`` and ``dec`` their
+    per-group aggregates over the pure chunks' metadata and over the
+    decoded rows, ``merge`` the functions folding the two sides."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    pred = _where_parse(snap.schema, where, where_in, fn, required=False)
+    if pred is not None and not pred.satisfiable:
+        empty = from_arrow_schema(pa.schema([snap.schema.field(group_col)]),
+                                  prefer_timestamp_ntz=True)
+        for name, t in out:
+            empty = empty.add(name, t)
+        return snap.spark.createDataFrame([], schema=empty)
+    pure, keep, g_type = _grouped_split(
+        snap.frame, snap.schema, group_col, value_col, where=pred,
+        **split_kw)
+    rows, split = snap.decode(
+        sorted({group_col, value_col} | (pred.cols if pred else set())),
+        keep=keep)
+    if pred is not None:
+        rows = rows.filter(pred.cond)
+    merged = rows.groupBy(group_col).agg(
+        *[a.cast(t).alias(n) for a, (n, t) in zip(dec, out)])
+    if pure is not None and split:
+        merged = merged.unionByName(
             pure.groupBy("__grp_raw")
-            .agg(F.min(lo).alias("v_min"), F.max(hi).alias("v_max"),
-                 F.sum("__v_n_values").alias("n_rows"))
+            .agg(*[a.cast(t).alias(n) for a, (n, t) in zip(meta, out)])
             .select(F.col("__grp_raw").cast(g_type).alias(group_col),
-                    "v_min", "v_max", F.col("n_rows").cast("long"))
-        )
-
-    v = F.col(value_col)
-    if is_str:
-        pass  # string extremes compare as-is
-    elif is_float:
-        # zone maps exclude NaNs: mirror SQL's finite extremes, NOT
-        # Spark's greatest-value NaN ordering
-        v = F.when(~F.isnan(v), v).cast("double")
-    else:
-        v = v.cast("long").cast("double")
-    dec = decode_table(mixed_manifest, out_schema,
-                       columns=[group_col, value_col])
-    sides.append(
-        dec.groupBy(group_col)
-        .agg(F.min(v).alias("v_min"), F.max(v).alias("v_max"),
-             F.count(F.lit(1)).alias("n_rows"))
-    )
-    merged = sides[0]
-    for s in sides[1:]:
-        merged = merged.unionByName(s)
-    return (
-        merged.groupBy(group_col)
-        .agg(F.min("v_min").alias("v_min"), F.max("v_max").alias("v_max"),
-             F.sum("n_rows").cast("long").alias("n_rows"))
-    )
-
-
-def _grouped_where_split(manifest_df, out_schema, group_col, value_col,
-                         where, value_cond, value_cols,
-                         nullable_value_ok, where_in=None):
-    """Scaffolding for the PREDICATE-filtered grouped pushdowns:
-    compose the group-purity split with the ``count_where``
-    classification. Returns ``(pred_cols, cond, satisfiable, pure_in,
-    dec_manifest, g_type, out_schema)`` where ``pred_cols`` are the
-    top-level columns every predicate touches (for the decode
-    projection), ``pure_in`` is the pure frame restricted to chunks
-    the classifier proves fully INSIDE every predicate (their
-    metadata rows answer for ALL their rows), and ``dec_manifest``
-    holds every chunk that is neither certified metadata-answerable
-    nor provably outside — the exact decode set."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if not isinstance(out_schema, pa.Schema):
-        out_schema = to_arrow_schema(out_schema)
-    specs, cond, satisfiable = _where_specs(out_schema, where)
-    in_specs, in_cond, in_sat = _where_in_specs(out_schema, where_in)
-    satisfiable = satisfiable and in_sat
-    if not specs and not in_specs:
-        raise ValueError(
-            "grouped where pushdown needs where= and/or where_in=")
-    cond = (cond & in_cond if cond is not None and in_cond is not None
-            else (in_cond if cond is None else cond))
-    pred_cols = sorted({s[0].split("#", 1)[0] for s in specs}
-                       | {s[0].split("#", 1)[0] for s in in_specs})
-    if not satisfiable:
-        return pred_cols, cond, False, None, None, None, out_schema
-    # pin an in-flight encode lineage ONCE: the purity split, the
-    # classifier, and the decode below each re-evaluate the manifest
-    if not _cheap_rescan(manifest_df):
-        manifest_df = manifest_df.localCheckpoint(eager=True)
-    pure, _, g_type, out_schema = _grouped_split(
-        manifest_df, out_schema, group_col, value_col,
-        value_cond=value_cond, value_cols=value_cols,
-        nullable_value_ok=nullable_value_ok, pin=False)
-    cls = _count_where_classify(manifest_df, out_schema, specs, in_specs)
-    in_keys = cls.filter(F.col("__cls") == "in").select("chunk_key")
-    out_keys = cls.filter(F.col("__cls") == "out").select("chunk_key")
-    pure_in = (None if pure is None
-               else pure.join(in_keys, "chunk_key", "left_semi"))
-    # decode = everything not metadata-certified and not provably out
-    dec_manifest = manifest_df
-    if pure_in is not None:
-        dec_manifest = dec_manifest.join(
-            pure_in.select("chunk_key"), "chunk_key", "left_anti")
-    dec_manifest = dec_manifest.join(out_keys, "chunk_key", "left_anti")
-    return pred_cols, cond, True, pure_in, dec_manifest, g_type, out_schema
-
-
-def group_sums_where(manifest_df, out_schema, group_col, value_col,
-                     where=None, where_in=None):
-    """``group_sums`` under a range predicate: ``SELECT group_col,
-    SUM(value_col), COUNT(*), COUNT(value_col) WHERE <numeric ranges>
-    GROUP BY group_col`` — the canonical sliced-rollup OLAP probe
-    (revenue per source inside a time/value band). Hybrid twice over:
-    a chunk answers from metadata only when it is GROUP-PURE (zone map
-    min == max) AND the ``count_where`` classifier proves every one of
-    its rows inside every range ('in'); chunks provably outside any
-    range contribute nothing; everything else decodes with the exact
-    filter and groupBy. Same output shape, exactness contract, and
-    integer/boolean value rule as ``group_sums``; same predicate rules
-    as ``count_where`` (int/float columns, NULL/NaN rows never count,
-    soundness degrades route to the decode side). On a layout
-    clustered by (group_col, predicate col) — e.g. z-order over both —
-    a 100 TB sliced rollup is a blob-free metadata groupBy plus
-    boundary-chunk decodes."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-
-    if not isinstance(out_schema, pa.Schema):
-        out_schema = to_arrow_schema(out_schema)
-    v_field = out_schema.field(value_col)
-    if not (pa.types.is_integer(v_field.type)
-            or pa.types.is_boolean(v_field.type)):
-        raise TypeError(
-            f"group_sums_where value column must be integer/boolean, "
-            f"got {value_col!r}: {v_field.type}")
-    pred_cols, cond, satisfiable, pure_in, dec_manifest, g_type, out_schema = \
-        _grouped_where_split(
-            manifest_df, out_schema, group_col, value_col, where,
-            value_cond=F.col("val_sum").isNotNull(),
-            value_cols=["val_sum", "n_values"], nullable_value_ok=True,
-            where_in=where_in)
-    if not satisfiable:
-        g_spark = from_arrow_schema(
-            pa.schema([out_schema.field(group_col)]),
-            prefer_timestamp_ntz=True)
-        return manifest_df.sparkSession.createDataFrame([], schema=(
-            g_spark.add("v_sum", "decimal(38,0)").add("n_rows", "long")
-            .add("n_nonnull", "long")))
-
-    sides = []
-    if pure_in is not None:
-        sides.append(
-            pure_in.withColumn(
-                "__nnn", F.coalesce("__mask_sum", F.col("__v_n_values")))
-            .groupBy("__grp_raw")
-            .agg(F.sum("__v_val_sum").alias("v_sum"),
-                 F.sum("__v_n_values").alias("n_rows"),
-                 F.sum("__nnn").alias("n_nonnull"))
-            .select(F.col("__grp_raw").cast(g_type).alias(group_col),
-                    F.col("v_sum").cast("decimal(38,0)").alias("v_sum"),
-                    F.col("n_rows").cast("long").alias("n_rows"),
-                    F.col("n_nonnull").cast("long").alias("n_nonnull")))
-    v = F.col(value_col)
-    if pa.types.is_boolean(v_field.type):
-        v = v.cast("long")
-    proj = sorted({group_col, value_col} | set(pred_cols))
-    dec = decode_table(dec_manifest, out_schema, columns=proj).filter(cond)
-    sides.append(
-        dec.groupBy(group_col)
-        .agg(F.sum(v.cast("decimal(38,0)")).cast("decimal(38,0)")
-             .alias("v_sum"),
-             F.count(F.lit(1)).alias("n_rows"),
-             F.count(value_col).alias("n_nonnull")))
-    merged = sides[0]
-    for s in sides[1:]:
-        merged = merged.unionByName(s)
-    return (
-        merged.groupBy(group_col)
-        .agg(F.sum("v_sum").cast("decimal(38,0)").alias("v_sum"),
-             F.sum("n_rows").cast("long").alias("n_rows"),
-             F.sum("n_nonnull").cast("long").alias("n_nonnull")))
-
-
-def group_stats_where(manifest_df, out_schema, group_col, value_col,
-                      where=None, where_in=None):
-    """``group_stats`` under a range predicate: per-group MIN/MAX/COUNT
-    of the rows satisfying <numeric ranges>. Metadata answers for
-    chunks that are group-pure AND classified 'in' (every row
-    satisfies, so the chunk extremes ARE the satisfying rows'
-    extremes); 'out' chunks vanish; the rest decode with the exact
-    filter. Same typing/degrade rules as ``group_stats`` (nullable
-    value chunks always decode — filler values pollute extremes) and
-    ``count_where``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-
-    if not isinstance(out_schema, pa.Schema):
-        out_schema = to_arrow_schema(out_schema)
-    v_field = out_schema.field(value_col)
-    t = v_field.type
-    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    is_float = pa.types.is_floating(t)
-    if is_str:
-        value_cond = (
-            F.col("val_min_str").isNotNull()
-            & F.col("val_max_str").isNotNull()
-            & (F.length("val_min_str") < F.lit(_STR_BOUND_MAX_CHARS))
-            & (F.length("val_max_str") < F.lit(_STR_BOUND_MAX_CHARS)))
-        value_cols = ["val_min_str", "val_max_str", "n_values"]
-        lo, hi = "__v_val_min_str", "__v_val_max_str"
-    elif pa.types.is_integer(t):
-        value_cond = (
-            F.col("val_min").isNotNull()
-            & (F.abs(F.col("val_min")) <= F.lit(float(2 ** 53)))
-            & (F.abs(F.col("val_max")) <= F.lit(float(2 ** 53))))
-        value_cols = ["val_min", "val_max", "n_values"]
-        lo, hi = "__v_val_min", "__v_val_max"
-    elif is_float or pa.types.is_boolean(t):
-        value_cond = F.col("val_min").isNotNull()
-        value_cols = ["val_min", "val_max", "n_values"]
-        lo, hi = "__v_val_min", "__v_val_max"
-    else:
-        raise TypeError(
-            f"group_stats_where value column must be numeric/boolean/"
-            f"string, got {value_col!r}: {t}")
-    pred_cols, cond, satisfiable, pure_in, dec_manifest, g_type, out_schema = \
-        _grouped_where_split(
-            manifest_df, out_schema, group_col, value_col, where,
-            value_cond=value_cond, value_cols=value_cols,
-            nullable_value_ok=False, where_in=where_in)
-    if not satisfiable:
-        g_spark = from_arrow_schema(
-            pa.schema([out_schema.field(group_col)]),
-            prefer_timestamp_ntz=True)
-        vt = "string" if is_str else "double"
-        return manifest_df.sparkSession.createDataFrame([], schema=(
-            g_spark.add("v_min", vt).add("v_max", vt)
-            .add("n_rows", "long")))
-
-    sides = []
-    if pure_in is not None:
-        sides.append(
-            pure_in.groupBy("__grp_raw")
-            .agg(F.min(lo).alias("v_min"), F.max(hi).alias("v_max"),
-                 F.sum("__v_n_values").alias("n_rows"))
-            .select(F.col("__grp_raw").cast(g_type).alias(group_col),
-                    "v_min", "v_max", F.col("n_rows").cast("long")))
-    v = F.col(value_col)
-    if is_str:
-        pass
-    elif is_float:
-        v = F.when(~F.isnan(v), v).cast("double")
-    else:
-        v = v.cast("long").cast("double")
-    proj = sorted({group_col, value_col} | set(pred_cols))
-    dec = decode_table(dec_manifest, out_schema, columns=proj).filter(cond)
-    sides.append(
-        dec.groupBy(group_col)
-        .agg(F.min(v).alias("v_min"), F.max(v).alias("v_max"),
-             F.count(F.lit(1)).alias("n_rows")))
-    merged = sides[0]
-    for s in sides[1:]:
-        merged = merged.unionByName(s)
-    return (
-        merged.groupBy(group_col)
-        .agg(F.min("v_min").alias("v_min"), F.max("v_max").alias("v_max"),
-             F.sum("n_rows").cast("long").alias("n_rows")))
+                    *[n for n, _ in out]))
+    return merged.groupBy(group_col).agg(
+        *[f(n).cast(t).alias(n) for f, (n, t) in zip(merge, out)])
 
 
 # ---------------------------------------------------------------------------

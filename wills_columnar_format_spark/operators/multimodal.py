@@ -251,8 +251,9 @@ def media_meta(df, payload_col: str, id_col: str):
     12 — every writer's default, incl. ``synth_wav``) stay on the
     vectorized path; non-canonical RIFF layouts fall back to the
     ``decode_media`` chunk walk for just those rows. Unknown containers
-    yield media_type NULL, metadata NULL — classification, not
-    failure."""
+    and BMP variants ``decode_media`` does not decode (palettized,
+    RLE/bitfield-compressed) yield media_type NULL, metadata NULL —
+    classification, not failure."""
     import pyarrow as pa
 
     def fn(batches):
@@ -277,6 +278,13 @@ def media_meta(df, payload_col: str, id_col: str):
                 return out
 
             is_bmp = (lens >= 54) & (at(0) == 0x42) & (at(1) == 0x4D)
+            bi = np.flatnonzero(is_bmp)
+            # only the BMPs _decode_bmp accepts (BITMAPINFOHEADER+,
+            # BI_RGB, 24/32 bpp): a palettized or RLE payload's bpp//8
+            # is not its channel count, so it stays unclassified
+            is_bmp[bi[(_le(data, o[bi] + 14, 4) < 40)
+                      | (_le(data, o[bi] + 30, 4) != 0)
+                      | ~np.isin(_le(data, o[bi] + 28, 2), (24, 32))]] = False
             is_riff = ((lens >= 44) & (at(0) == 0x52) & (at(1) == 0x49)
                        & (at(2) == 0x46) & (at(3) == 0x46)
                        & (at(8) == 0x57) & (at(9) == 0x41)

@@ -708,8 +708,8 @@ FROM documents GROUP BY lang
 
 
 def q_group_where_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliced-rollup pushdown (engine.group_sums_where /
-    group_stats_where): ``GROUP BY lang`` with a ``WHERE n_chars
+    """Sliced-rollup pushdown (engine.group_sums / group_stats with
+    ``where=``): ``GROUP BY lang`` with a ``WHERE n_chars
     BETWEEN`` band — the canonical filtered-rollup OLAP probe. A chunk
     answers from metadata only when it is group-pure AND the
     count_where classifier proves every row inside the band; provable
@@ -718,7 +718,7 @@ def q_group_where_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions engage; the oracle runs the real filtered GROUP BY. At
     100 TB this is a blob-free metadata groupBy plus cluster-boundary
     decodes instead of a corpus scan."""
-    from ..engine import encode_table, group_stats_where, group_sums_where
+    from ..engine import encode_table, group_stats, group_sums
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cl = (df.repartitionByRange(4, "lang", "n_chars")
@@ -727,10 +727,10 @@ def q_group_where_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                       partitioner="none", chunk_rows=64)
          .localCheckpoint(eager=True))
     band = ("n_chars", 100, 900)
-    sums = group_sums_where(m, df.schema, "lang", "n_chars", band).select(
+    sums = group_sums(m, df.schema, "lang", "n_chars", where=band).select(
         "lang", F.col("v_sum").cast("double").alias("v_sum_d"),
         "n_rows", "n_nonnull")
-    stats = group_stats_where(m, df.schema, "lang", "n_chars", band).select(
+    stats = group_stats(m, df.schema, "lang", "n_chars", where=band).select(
         "lang", "v_min", "v_max")
     return sums.join(stats, "lang")
 
@@ -2318,14 +2318,14 @@ ORACLE_WHERE_PUSHDOWN_CHECKPOINT = (
 
 
 def q_topk_where_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered leaderboard (engine.topk_where): the 30 highest-value
-    events OF ONE TYPE — ``WHERE event_type = … ORDER BY value DESC
-    LIMIT 30`` composing both prunes: predicate-'out' chunks never
-    open (string zone maps on the type-clustered layout), the
-    certified tau accumulates over predicate-'in' chunks only, and
+    """Filtered leaderboard (engine.topk_table with ``where_in=``): the
+    30 highest-value events OF ONE TYPE — ``WHERE event_type = … ORDER
+    BY value DESC LIMIT 30`` composing both prunes: predicate-'out'
+    chunks never open (string zone maps on the type-clustered layout),
+    the certified tau accumulates over predicate-'in' chunks only, and
     the value zone maps then drop every chunk whose max can't reach
     tau. Exact ORDER BY ... LIMIT finishes as TakeOrderedAndProject."""
-    from ..engine import encode_table, topk_where
+    from ..engine import encode_table, topk_table
 
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     cl = (df.repartitionByRange(8, "event_type", "value")
@@ -2333,7 +2333,7 @@ def q_topk_where_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = (encode_table(cl, key_col="event_id", codec="auto",
                       partitioner="none", chunk_rows=1024,
                       histograms=True).localCheckpoint(eager=True))
-    out = topk_where(m, df.schema, "value", 30,
+    out = topk_table(m, df.schema, "value", 30,
                      where_in=("event_type", ["click"]),
                      descending=True,
                      columns=["event_id", "event_type", "value"],
@@ -2350,8 +2350,8 @@ ORACLE_TOPK_WHERE_SCAN = (
 
 def q_topk_where_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered leaderboard over a PERSISTED checkpoint
-    (engine.topk_where_checkpoint): both prune dimensions — the
-    predicate classifier's non-'out' set and the 'in'-accumulated tau's
+    (engine.topk_checkpoint with ``where_in=``): both prune dimensions —
+    the predicate classifier's non-'out' set and the 'in'-accumulated tau's
     zone-reach set — intersect into an explicit chunk restriction that
     rides decode_checkpoint's zero-Exchange per-file reader; only those
     chunks' files open. Ascending (the 30 SMALLEST purchase values):
@@ -2361,7 +2361,7 @@ def q_topk_where_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..engine import encode_table, topk_where_checkpoint, write_checkpoint
+    from ..engine import encode_table, topk_checkpoint, write_checkpoint
 
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     cl = (df.repartitionByRange(8, "event_type", "value")
@@ -2373,7 +2373,7 @@ def q_topk_where_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                          partitioner="none", chunk_rows=1024,
                          histograms=True)
         write_checkpoint(m, ckpt, schema=df.schema)
-        out = topk_where_checkpoint(
+        out = topk_checkpoint(
             spark, ckpt, "value", 30, where_in=("event_type", ["purchase"]),
             descending=False,
             columns=["event_id", "event_type", "value"],

@@ -8,6 +8,7 @@ to parallelism (not the 200 default).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
@@ -17,8 +18,12 @@ def get_spark(
     app: str = "wills_columnar_format_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
 ) -> SparkSession:
+    """A local SparkSession sized from the machine unless told otherwise:
+    ``cores`` from ``SPARK_GRAFT_CPUS``, else the CPUs this process may
+    run on; ``driver_memory`` half of MemTotal (a heap ceiling, not a
+    reservation)."""
     # glibc allocator tuning for the PYTHON WORKERS (they inherit this
     # environment through the JVM): numpy's large temporaries sit above
     # malloc's default mmap threshold, so every encode-kernel array is
@@ -31,7 +36,9 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(64 << 20))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(256 << 20))
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
+    if driver_memory is None:
+        driver_memory = _half_memtotal()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -110,27 +117,73 @@ def get_spark(
     return spark
 
 
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, which a
+    container's cpuset narrows), not the host's count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _half_memtotal() -> str:
+    """Half of ``/proc/meminfo`` MemTotal as a JVM size string; "4g"
+    where there is no /proc."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def build_package_zip() -> str:
-    """Build (once) and return the package zip path — the artifact
-    ``spark-submit --py-files`` would ship. Pure filesystem work so it
-    can run BEFORE the SparkContext exists (``spark.submit.pyFiles``
-    must be set at launch for driver-side Python planner processes to
-    see it)."""
+    """Build (once per package content) and return the package zip
+    path — the artifact ``spark-submit --py-files`` would ship. Pure
+    filesystem work so it can run BEFORE the SparkContext exists
+    (``spark.submit.pyFiles`` must be set at launch for driver-side
+    Python planner processes to see it).
+
+    The file name carries a digest of every ``.py`` file's relative
+    path and contents, so an edited package or a second checkout never
+    reuses a zip of other code (workers would run it while the driver
+    runs this one). The zip is written to a temp file and renamed into
+    place, so a concurrent reader never sees a partial zip."""
+    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(os.environ.get("TMPDIR", "/tmp"), f"{pkg_name}.zip")
+    sources = []
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                sources.append(
+                    (os.path.join(pkg_name, os.path.relpath(full, pkg_dir)),
+                     full))
+    digest = hashlib.blake2b(digest_size=8)
+    for rel, full in sources:
+        with open(full, "rb") as fh:
+            data = fh.read()
+        for part in (rel.encode(), len(data).to_bytes(8, "little"), data):
+            digest.update(part)
+    out_dir = os.environ.get("TMPDIR", "/tmp")
+    zip_path = os.path.join(out_dir, f"{pkg_name}-{digest.hexdigest()}.zip")
     if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-        os.replace(tmp, zip_path)
+        fd, tmp = tempfile.mkstemp(prefix=f".{pkg_name}-", suffix=".zip",
+                                   dir=out_dir)
+        os.close(fd)
+        try:
+            with zipfile.ZipFile(tmp, "w") as zf:
+                for rel, full in sources:
+                    zf.write(full, rel)
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     return zip_path
 
 
