@@ -263,6 +263,31 @@ def test_upsert_aligned_chunk_collision_is_salted(spark):
     assert all(rows[k] == 2 * k for k in range(256, 1024))
 
 
+@pytest.mark.parametrize("keys_max", [None, 5])
+def test_upsert_table_replay_needs_salt(spark, docs, monkeypatch, keys_max):
+    """A replayed batch without gen_salt would mint the first
+    application's chunk keys again and its own mask pass would kill
+    both copies: refused loudly, on the driver-probe and the
+    distributed mark path alike. With a salt every row survives."""
+    from wills_columnar_format_spark import engine as eng
+
+    if keys_max is not None:
+        monkeypatch.setattr(eng, "UPSERT_KEYS_MAX", keys_max)
+    df, rows, _ = docs
+    batch = df.filter("doc_id % 7 = 2").withColumn("text", F.upper("text"))
+    m1 = eng.upsert_table(encode_table(df, key_col="doc_id",
+                                       num_partitions=4),
+                          batch, "doc_id", num_partitions=2)
+    with pytest.raises(ValueError, match="gen_salt"):
+        eng.upsert_table(m1, batch, "doc_id", num_partitions=2)
+    m2 = eng.upsert_table(m1, batch, "doc_id", num_partitions=2,
+                          gen_salt="replay-1")
+    got = {r.doc_id: r.text for r in decode_table(m2, df.schema).collect()}
+    want = {d: (r.text.upper() if d % 7 == 2 else r.text)
+            for d, r in rows.items()}
+    assert got == want
+
+
 def test_upsert_checkpoint_keeps_shuffle_free_read(spark, docs, tmp_path):
     from wills_columnar_format_spark.engine import upsert_checkpoint
 

@@ -2443,17 +2443,19 @@ def _prune_by_key_set(manifest_df, keys):
 
 
 def _bloom_keep_chunks(manifest_df, keys, key_col, extra_cols=(),
-                       cap=BLOOM_PRUNE_MAX_KEYS):
+                       cap=None):
     """Rows (chunk_key, *extra_cols) a ``keys=`` decode must KEEP per
     the per-chunk key Bloom filters — bloom hit, or no bloom recorded
     (legacy manifests / null-bearing keys: conservative keep) — or
     None when pruning must be skipped (keep set past the driver-safety
-    cap, mirroring VALUE_PRUNE_MAX_KEYS). Metadata-only: the
-    distributed membership test reads (chunk_key, key_bloom) of the KEY
-    sub-column's rows; blobs never move, and the driver ships only the
-    probes' precomputed hash pairs."""
+    ``cap``, default BLOOM_PRUNE_MAX_KEYS read at call time). Metadata-
+    only: the distributed membership test reads (chunk_key, key_bloom)
+    of the KEY sub-column's rows; blobs never move, and the driver
+    ships only the probes' precomputed hash pairs."""
     from pyspark.sql import functions as F
 
+    if cap is None:
+        cap = BLOOM_PRUNE_MAX_KEYS
     ks = list(dict.fromkeys(keys))
     if _keys_kind(ks) == "empty":
         return []
@@ -2700,6 +2702,140 @@ def _filter_by_composite_keys(out, parts, canon_keys):
             .drop("__ck_probe"))
 
 
+# Driver-side cap on a prune pass's hit-key set: past it the pass
+# keeps whole files on a checkpoint and prunes nothing on a manifest
+# frame (the exact post-filter always applies) instead of collecting an
+# unbounded key list.
+VALUE_PRUNE_MAX_KEYS = 100_000
+
+
+def _keys_by_file(rows, by_file: bool) -> dict:
+    """``{file: [chunk_key, ...]}`` of collected (chunk_key[, __file])
+    rows; a manifest frame has no files and maps everything to None."""
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r["__file"] if by_file else None, []).append(
+            r["chunk_key"])
+    return out
+
+
+def _collect_hit_keys(hits, by_file: bool):
+    """The keep map of one collecting prune pass, bounded by
+    VALUE_PRUNE_MAX_KEYS (read at call time). Past the cap a checkpoint
+    pass keeps the whole files its hits live in (``{file: None}``) and a
+    manifest pass returns None (no prune)."""
+    rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
+    if len(rows) <= VALUE_PRUNE_MAX_KEYS:
+        return _keys_by_file(rows, by_file)
+    if not by_file:
+        return None
+    return {r["__file"]: None
+            for r in hits.select("__file").distinct().collect()}
+
+
+def _plan_chunk_prune(mdf, out_schema, added, keys=None, key_col=None,
+                      value_range=None, value_in=None, contains=None,
+                      pin=False):
+    """THE metadata chunk elimination behind ``decode_table`` and
+    ``decode_checkpoint``. ``mdf`` is a manifest frame, or a checkpoint's
+    metadata frame carrying ``__file``. Returns ``(mdf, keep, filters)``:
+    the frame pruned by the key zone maps and key Blooms, the
+    ``{file: [chunk_key] | None}`` keep map of every pass AND-folded
+    (None: nothing pruned; a manifest frame's one "file" is None), and
+    the exact row filters of value_range / value_in / contains.
+
+    Each value pass runs on the key-pruned frame through
+    ``_collect_hit_keys``; past BLOOM_PRUNE_MAX_KEYS the key-Bloom pass
+    prunes nothing (the zone-pruned frame stands). Columns whose zone
+    maps the manifest lacks (legacy manifests) and metadata-only ADDED
+    columns (a chunk with no rows for the column is all-default VALUES,
+    not an absence) never prune; their exact filter carries the whole
+    predicate. ``pin=True``
+    (an in-flight manifest, one flowing straight from ``encode_table``)
+    materializes the frame once before the first collecting pass:
+    otherwise the encode lineage evaluates once per pass and again for
+    the decode, paying the encode each time and, under the
+    nondeterministic range sampler, naming chunk keys of a DIFFERENT
+    evaluation (the semi-join would silently drop chunks). The pinned
+    blocks free when the returned plan is garbage-collected."""
+    by_file = "__file" in mdf.columns
+    extra = ("__file",) if by_file else ()
+
+    def usable(vcol, maps_col):
+        return maps_col in mdf.columns and vcol.split("#")[0] not in added
+
+    filters, passes = [], []
+    if value_range is not None:
+        specs = value_range if isinstance(value_range, list) else [value_range]
+        vrs = [_prepare_value_range(out_schema, s) for s in specs]
+        filters += [v[6] for v in vrs]
+        use = [v for v in vrs if usable(v[0], _value_maps_col(v[:3]))]
+        if use:
+            # AND semantics in ONE aggregate job
+            passes.append(lambda f: _conjunctive_hit_keys(f, use, extra))
+    if value_in is not None:
+        in_vrs, in_expr = _prepare_value_in(out_schema, value_in)
+        filters.append(in_expr)
+        if usable(in_vrs[0][0], _value_maps_col(in_vrs[0][:3])):
+            pb = (_bloom_probe_values(value_in[1])
+                  if "val_bloom" in mdf.columns else None)
+            if pb is not None:
+                # zone AND value-Bloom membership in one pass: the prune
+                # that works on hash layouts, where every chunk's zone
+                # spans the value set
+                passes.append(lambda f: _contains_hit_keys(
+                    f, in_vrs[0][0], pb[0], pb[1], extra))
+            else:
+                passes.append(
+                    lambda f: _disjunctive_hit_keys(f, in_vrs, extra))
+    if contains is not None:
+        ct_sub, ct_probe, ct_is_str, ct_expr = _prepare_contains(
+            out_schema, contains)
+        filters.append(ct_expr)
+        if usable(contains[0], "val_min_str" if ct_is_str else "val_min"):
+            passes.append(lambda f: _contains_hit_keys(
+                f, ct_sub, ct_probe, ct_is_str, extra))
+    keep = None
+    bloom = False
+    if keys is not None:
+        # multi-point lookup: a broadcast non-equi semi-join of the key
+        # set against the key zone maps (metadata only)
+        probe_keys = _canon_temporal_keys(keys)
+        mdf = _prune_by_key_set(mdf, probe_keys)
+        # the Bloom pass prunes the chunks the zone maps CAN'T: in the
+        # 'hash' layout every chunk spans the full key range
+        bloom = key_col is not None and "key_bloom" in mdf.columns
+    if pin and (passes or bloom):
+        mdf = mdf.localCheckpoint(eager=True)
+    if bloom:
+        rows = _bloom_keep_chunks(mdf, probe_keys, key_col, extra_cols=extra)
+        if rows is not None:
+            mdf = _bloom_semi_join(mdf, rows)
+            keep = _keys_by_file(rows, by_file)
+    for hits in passes:
+        if keep == {}:
+            break
+        keep = _intersect_file_keys(keep,
+                                    _collect_hit_keys(hits(mdf), by_file))
+    return mdf, keep, filters
+
+
+def _exact_filter(out, key_range, key_col, keys, ck_parts, filters):
+    """The exact row post-filter both decode paths end in: metadata
+    pruning only ever keeps extra chunks, this removes their rows."""
+    from pyspark.sql import functions as F
+
+    if key_range is not None and key_col is not None:
+        lo, hi = key_range
+        out = out.filter((F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi)))
+    if keys is not None and key_col is not None:
+        out = (_filter_by_composite_keys(out, ck_parts, keys)
+               if ck_parts else _filter_by_key_set(out, key_col, keys))
+    for f in filters:
+        out = out.filter(f)
+    return out
+
+
 def decode_table(manifest_df, out_schema, key_range=None, key_col=None,
                  assume_unique=False, arranged=False, columns=None,
                  legacy_nan_zonemaps=False, value_range=None, keys=None,
@@ -2816,153 +2952,19 @@ def decode_table(manifest_df, out_schema, key_range=None, key_col=None,
         manifest_df = manifest_df.filter(
             _zone_keep_expr(key_range, legacy_nan_zonemaps)
         )
-    added = _added_defaults(out_schema)
-    if added and len(added) == len(out_schema):
-        raise ValueError(
-            f"columns {sorted(added)} are all metadata-only ADDED "
-            "columns (add_column_checkpoint) — include at least one "
-            "stored column in the projection to anchor row counts, or "
-            "compact the checkpoint to materialize them"
-        )
+    added = _decode_defaults(out_schema)
     # the deterministic-rescan verdict is read ONCE, on the scan+filter
-    # plan, BEFORE any pruning semi-join is attached: the join nodes
-    # would mask a persisted manifest's cheap plan and force a
-    # blob-materializing pin for nothing (both the value_range and the
-    # bloom multi-use subqueries below consult it)
-    cheap = True if (value_range is None and keys is None
-                     and value_in is None and contains is None) \
-        else _cheap_rescan(manifest_df)
-    pinned = False
-    vrs = []
-    if value_range is not None:
-        specs = value_range if isinstance(value_range, list) else [value_range]
-        vrs = [_prepare_value_range(out_schema, s) for s in specs]
-        usable = [v for v in vrs if _value_maps_col(v[:3]) in manifest_df.columns
-                  and v[0].split("#")[0] not in added]
-        # (non-usable = manifest predates these zone maps, or the
-        # column is a metadata-only add whose absent chunks are
-        # all-default VALUES — no pruning for that predicate, its
-        # exact filter below still applies)
-        if usable:
-            if not cheap:
-                # AUTO-MATERIALIZE an in-flight manifest (one flowing
-                # straight from encode_table) before the hit-key
-                # subquery: without it the encode lineage evaluates
-                # once for the hit set and again for the main pass —
-                # paying the encode twice AND, under the
-                # nondeterministic range sampler, producing DIFFERENT
-                # chunk keys in each evaluation (the semi-join would
-                # silently drop chunks). Persisted manifests
-                # (scan+filter plans — note the done-marker Filter
-                # above, so a bare-scan test would never pass here)
-                # skip this: file re-reads are deterministic and
-                # cheap, and pinning them would materialize every
-                # blob into executor storage for nothing. The pinned
-                # blocks free when the returned plan is
-                # garbage-collected.
-                manifest_df = manifest_df.localCheckpoint(eager=True)
-                pinned = True
-            # conjunctive pruning in ONE aggregate job: each predicate's
-            # qualifying rows are tagged with a range index, and a chunk
-            # survives only when it matched EVERY index (countDistinct —
-            # two predicates on the same column still count separately).
-            # Collect the qualifying keys once (blob-free: ≤ cap+1 key
-            # strings) and rebuild the probe side as a local-relation
-            # broadcast — re-joining the manifest lineage would pay the
-            # encode twice on in-flight manifests. DRIVER-SAFE by the
-            # cap: on uncorrelated columns every chunk qualifies and an
-            # unbounded key set would OOM the driver where a plain
-            # post-filter succeeds; past the cap, skip pruning (the
-            # exact filters below are always applied).
-            hit = _conjunctive_hit_keys(manifest_df, usable)
-            rows = hit.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                spark = manifest_df.sparkSession
-                keys_df = spark.createDataFrame(
-                    [(r["chunk_key"],) for r in rows], "chunk_key string"
-                )
-                manifest_df = manifest_df.join(
-                    F.broadcast(keys_df), "chunk_key", "left_semi"
-                )
-    in_expr = None
-    if value_in is not None:
-        # IN-list prune: same broadcast-semi-join carrier as
-        # value_range, but the zone-map test is an OR across the value
-        # set (one metadata pass) — AND-composes with the value_range
-        # semi-join above because it stacks a second semi-join.
-        in_vrs, in_expr = _prepare_value_in(out_schema, value_in)
-        if (_value_maps_col(in_vrs[0][:3]) in manifest_df.columns
-                and in_vrs[0][0].split("#")[0] not in added):
-            if not cheap and not pinned:
-                manifest_df = manifest_df.localCheckpoint(eager=True)
-                pinned = True
-            pb = (_bloom_probe_values(value_in[1])
-                  if "val_bloom" in manifest_df.columns else None)
-            if pb is not None:
-                # bloom-refined IN-list prune: zone AND membership in
-                # one metadata pass — the prune that works on hash
-                # layouts where every chunk's zone spans the value set
-                hits = _contains_hit_keys(manifest_df, in_vrs[0][0],
-                                          pb[0], pb[1])
-            else:
-                hits = _disjunctive_hit_keys(manifest_df, in_vrs)
-            rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                spark = manifest_df.sparkSession
-                keys_df = spark.createDataFrame(
-                    [(r["chunk_key"],) for r in rows], "chunk_key string"
-                )
-                manifest_df = manifest_df.join(
-                    F.broadcast(keys_df), "chunk_key", "left_semi"
-                )
-    ct_expr = None
-    if contains is not None:
-        # ARRAY-membership prune: zone + value-bloom tests on the
-        # `#values` rows in ONE metadata pass, same broadcast-semi-join
-        # carrier (and the same in-flight-manifest pin hazard) as the
-        # value_range/value_in blocks above.
-        ct_sub, ct_probe, ct_is_str, ct_expr = _prepare_contains(
-            out_schema, contains)
-        zcol = "val_min_str" if ct_is_str else "val_min"
-        if zcol in manifest_df.columns and contains[0] not in added:
-            if not cheap and not pinned:
-                manifest_df = manifest_df.localCheckpoint(eager=True)
-                pinned = True
-            hits = _contains_hit_keys(manifest_df, ct_sub, ct_probe,
-                                      ct_is_str)
-            rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                spark = manifest_df.sparkSession
-                keys_df = spark.createDataFrame(
-                    [(r["chunk_key"],) for r in rows], "chunk_key string"
-                )
-                manifest_df = manifest_df.join(
-                    F.broadcast(keys_df), "chunk_key", "left_semi"
-                )
-    if keys is not None:
-        # multi-point lookup: chunk pruning via a broadcast non-equi
-        # semi-join of the key set against the key zone maps (metadata
-        # only — blobs never move); the exact isin/semi filter applies
-        # after decode when key_col is given. Applied AFTER the
-        # value_range block on purpose: its non-scan Join node would
-        # otherwise defeat the _cheap_rescan gate above and force a
-        # blob-materializing localCheckpoint on persisted manifests.
-        probe_keys = _canon_temporal_keys(keys)
-        manifest_df = _prune_by_key_set(manifest_df, probe_keys)
-        if key_col is not None and "key_bloom" in manifest_df.columns:
-            # Bloom pass: prunes the chunks the zone maps CAN'T — in
-            # the 'hash' resume layout every chunk spans the full key
-            # range, so without this a point lookup decodes everything.
-            # In-flight manifests must be pinned first (same
-            # nondeterministic-re-evaluation hazard as value_range:
-            # the keep set would name chunk keys of a DIFFERENT
-            # evaluation of the encode); one pin serves both passes.
-            if not cheap and not pinned:
-                manifest_df = manifest_df.localCheckpoint(eager=True)
-                pinned = True
-            keep = _bloom_keep_chunks(manifest_df, probe_keys, key_col)
-            if keep is not None:
-                manifest_df = _bloom_semi_join(manifest_df, keep)
+    # plan, BEFORE any pruning join is attached: the join nodes would
+    # mask a persisted manifest's cheap plan and force a
+    # blob-materializing pin for nothing
+    in_flight = (not (value_range is None and keys is None
+                      and value_in is None and contains is None)
+                 and not _cheap_rescan(manifest_df))
+    manifest_df, keep, filters = _plan_chunk_prune(
+        manifest_df, out_schema, added, keys=keys, key_col=key_col,
+        value_range=value_range, value_in=value_in, contains=contains,
+        pin=in_flight)
+    manifest_df = _apply_restrict_chunks(manifest_df, keep)
     if "key_bloom" in manifest_df.columns:
         # pruning is done with it — don't ship ~1.25 B/key of bloom
         # bytes through the dedup/grouping shuffles below
@@ -2984,19 +2986,7 @@ def decode_table(manifest_df, out_schema, key_range=None, key_col=None,
                        defaults=added or None, emit_rowmeta=_emit_rowmeta),
         schema=from_arrow_schema(dec_schema, prefer_timestamp_ntz=True),
     )
-    if key_range is not None and key_col is not None:
-        lo, hi = key_range
-        out = out.filter((F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi)))
-    if keys is not None and key_col is not None:
-        out = (_filter_by_composite_keys(out, ck_parts, keys)
-               if ck_parts else _filter_by_key_set(out, key_col, keys))
-    for v in vrs:
-        out = out.filter(v[6])
-    if in_expr is not None:
-        out = out.filter(in_expr)
-    if ct_expr is not None:
-        out = out.filter(ct_expr)
-    return out
+    return _exact_filter(out, key_range, key_col, keys, ck_parts, filters)
 
 
 # ---------------------------------------------------------------------------
@@ -3315,35 +3305,53 @@ def upsert_table(manifest_df, new_df, key_col: str, **encode_kwargs):
     default path. A later re-encoding compaction folds the masked rows
     away and restores one clean generation.
 
-    Re-applying the SAME batch to a manifest that already carries the
-    first application's generation needs ``gen_salt`` (any string that
-    differs per application): without it the replay's chunk keys
-    collide with the first generation's and its own mask pass kills
-    both. ``upsert_checkpoint`` handles this automatically (the
-    destination's file listing is the salt).
+    Re-applying a batch with the SAME key set to a manifest that
+    already carries the first application's generation needs
+    ``gen_salt`` (any string that differs per application): the replay
+    would mint that generation's chunk keys again and its own mask pass
+    would kill both copies, so it is refused with a ValueError.
+    ``upsert_checkpoint`` handles this automatically (the destination's
+    file listing is the salt).
 
     Batches past ``UPSERT_KEYS_MAX`` distinct keys switch to the
     distributed mark pass (``_mark_sidecars_df``): no driver key list,
     cost ∝ the key sub-column of the corpus plus one semi-join
     shuffle — the backfill-scale MERGE path."""
+    from pyspark.sql import functions as F
+
     gen_salt = encode_kwargs.pop("gen_salt", "")
     ck_name, _, _ckp = _composite_args(key_col)
     key_arg = list(key_col) if _ckp else ck_name  # delete/encode spelling
     keys = _collect_upsert_keys(new_df, key_arg, allow_overflow=True)
     if keys is None:
-        if not _cheap_rescan(manifest_df):
-            manifest_df = manifest_df.localCheckpoint(eager=True)
         probe, key_ddl, _n, dgen = _distributed_mark_probe(new_df,
                                                            key_arg)
         gen = _upsert_generation([f"xor:{dgen}"], gen_salt)
-        sidecars = _mark_sidecars_df(manifest_df, probe, key_ddl,
-                                     ck_name, dgen)
-        base = manifest_df.unionByName(sidecars, allowMissingColumns=True)
     else:
-        canon = ([canon_composite_key(k) for k in keys] if _ckp
+        probe = ([canon_composite_key(k) for k in keys] if _ckp
                  else list(dict.fromkeys(_canon_temporal_keys(keys))))
-        gen = _upsert_generation(canon, gen_salt)
-        base = delete_keys(manifest_df, keys, key_arg)
+        gen = _upsert_generation(probe, gen_salt)
+    if not _cheap_rescan(manifest_df):
+        # in-flight manifest: the replay check, the mark pass and the
+        # decode must see the SAME chunk keys (see delete_keys)
+        manifest_df = manifest_df.localCheckpoint(eager=True)
+    if not manifest_df.filter(
+            F.col("chunk_key").startswith(f"u{gen}:")).isEmpty():
+        raise ValueError(
+            f"upsert generation {gen!r} is already in the manifest (this "
+            "key set was applied before with the same gen_salt) — the "
+            "replay's mask pass would delete both copies; pass a "
+            "gen_salt= that differs per application")
+    base = manifest_df
+    if keys is None:
+        base = base.unionByName(
+            _mark_sidecars_df(manifest_df, probe, key_ddl, ck_name, dgen),
+            allowMissingColumns=True)
+    elif _keys_kind(probe) != "empty":
+        # the delete_keys mark pass on the already-pinned manifest
+        base = base.unionByName(
+            _mark_sidecars(manifest_df, probe, _deletes_generation(probe),
+                           ck_name), allowMissingColumns=True)
     newm = _salt_chunk_keys(
         encode_table(new_df, key_col=key_arg, **encode_kwargs), gen
     )
@@ -4753,6 +4761,20 @@ def _added_defaults(out_schema: pa.Schema) -> dict:
     return out
 
 
+def _decode_defaults(out_schema: pa.Schema) -> dict:
+    """``_added_defaults`` of a decode's output schema, refusing a
+    projection of ADDED columns only (nothing anchors the row counts)."""
+    added = _added_defaults(out_schema)
+    if added and len(added) == len(out_schema):
+        raise ValueError(
+            f"columns {sorted(added)} are all metadata-only ADDED "
+            "columns (add_column_checkpoint) — include at least one "
+            "stored column in the projection to anchor row counts, or "
+            "compact the checkpoint to materialize them"
+        )
+    return added
+
+
 def _checkpoint_rename_map(ckpt_dir: str) -> dict[str, str]:
     """Logical column name -> PHYSICAL manifest name, from the
     ``_table_schema`` sidecar's per-field ``physical`` metadata
@@ -5575,8 +5597,9 @@ def _manifest_metadata(spark, ckpt_dir: str):
         cols += ["val_min", "val_max"]
     if "val_min_str" in mdf.columns:  # pre-round-4 checkpoints lack these
         cols += ["val_min_str", "val_max_str"]
-    if "key_bloom" in mdf.columns:  # pre-bloom checkpoints lack this
-        cols += ["key_bloom"]
+    # pre-bloom checkpoints lack these; Spark's column pruning leaves
+    # them unread unless a Bloom pass selects them
+    cols += [c for c in ("key_bloom", "val_bloom") if c in mdf.columns]
     return mdf.select(*cols, F.input_file_name().alias("__file"))
 
 
@@ -6894,12 +6917,6 @@ def _write_clustered_marker(ckpt_dir: str, sig: tuple[int, int] | None = None,
         f.write(json.dumps(rec).encode())
 
 
-# Driver-side cap on the value-range hit-key set shipped to readers:
-# past this, chunk-level pruning degrades to file-level only (plus the
-# exact post-filter) instead of materializing an unbounded key list.
-VALUE_PRUNE_MAX_KEYS = 100_000
-
-
 def make_file_decode_fn(out_schema: pa.Schema, phys_columns, key_range,
                         legacy_nan_zonemaps: bool, point_keys=None,
                         verify_checksums: bool = False, extra_deletes=None,
@@ -7004,32 +7021,16 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
     decode in place (see the section comment above for why the layout
     guarantees contiguity and how it is verified).
 
-    ``key_range`` prunes twice — whole FILES via a driver-side metadata
-    pass (file-level zone maps), then row groups/rows inside each file
-    via the pushed pyarrow predicate. ``columns`` projects the same way
-    ``decode_table`` does. ``value_range=(column, lo, hi)`` — or a LIST
-    of such tuples, AND-combined — prunes by any numeric or string
-    column's per-chunk value zone maps: whole files first, then
-    chunk-level inside each file via a per-file qualifying-key list
-    (bounded by VALUE_PRUNE_MAX_KEYS; past the cap it degrades to
-    file-level + exact post-filter). ``keys=[...]`` is the multi-point
-    lookup (see ``decode_table``): file-level pruning via the
-    driver-side metadata pass, a pushed OR-of-containment predicate
-    inside each file for ≤256 keys, exact filter with ``key_col`` —
-    plus, with ``key_col`` set, per-chunk key-Bloom-filter pruning at
-    file level AND chunk level inside each file (the prune that works
-    on hash-layout checkpoints, where zone maps keep every chunk).
-    ``value_in=(column, [v1, ...])`` is the IN-LIST predicate (see
-    ``decode_table``): files/chunks whose zone maps admit ANY of the
-    values, AND-intersected with the value_range and bloom prune maps,
-    exact-filtered after decode.
-    ``contains=(column, [v1, ...])`` is the ARRAY-membership predicate
-    (see ``decode_table``): files/chunks whose flattened-element zone
-    maps — and value Blooms, when the encode recorded them — admit ANY
-    of the values, AND-intersected with every other prune map,
-    exact-filtered with ``arrays_overlap`` after decode.
+    The arguments mean what they mean for ``decode_table`` (predicate
+    semantics, exact post-filters). What differs is where pruning
+    lands: the shared chunk-prune plan keeps whole FILES (one read task
+    each) and, inside each kept file, only the listed chunks; the
+    ``key_range``/``keys`` zone tests are also pushed into each file's
+    pyarrow read (``keys`` up to 256 values). Past VALUE_PRUNE_MAX_KEYS
+    hit chunks a value pass keeps the whole files its hits live in.
     Checkpoints that fail the clustered-layout check (duplicates from
-    resumed runs, chunks torn across files) fall back to
+    resumed runs, chunks torn across files), or carry more than
+    DELETES_COLLECT_MAX deletion sidecars, fall back to
     ``decode_table``'s shuffling path transparently.
 
     ``as_of=seq`` TIME-TRAVELS a logged checkpoint (one written via
@@ -7136,14 +7137,7 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
         return dec.toDF(*[inv.get(c, c) for c in dec.columns])
     full_schema = out_schema
     out_schema, phys = _project_out_schema(out_schema, columns)
-    added = _added_defaults(out_schema)
-    if added and len(added) == len(out_schema):
-        raise ValueError(
-            f"columns {sorted(added)} are all metadata-only ADDED "
-            "columns (add_column_checkpoint) — include at least one "
-            "stored column in the projection to anchor row counts, or "
-            "compact the checkpoint to materialize them"
-        )
+    added = _decode_defaults(out_schema)
     # file signature BEFORE the scan lists files: anything appended
     # after this point is either seen by the gate (and verified) or
     # newer than the marker we may write (and re-verified next call)
@@ -7155,92 +7149,57 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
     fdf = _manifest_metadata(spark, ckpt_dir)
     from pyspark.sql import functions as F
 
+    def empty():
+        return spark.createDataFrame(
+            [], from_arrow_schema(out_schema, prefer_timestamp_ntz=True))
+
     # time travel: restrict EVERY read (metadata, sidecars, fallbacks)
     # to the files commits <= as_of added. A still-valid _clustered
     # marker stays honored — a subset of a clustered file set is
     # clustered, and has_deletes=False over all files covers any subset
     # — but an as_of read never WRITES markers (its sidecar verdict is
     # partial).
-    snap_src = None
+    allowed = None
     if as_of is not None:
         allowed = _files_as_of(ckpt_dir, as_of)
         if not allowed:
-            return spark.createDataFrame(
-                [], from_arrow_schema(out_schema, prefer_timestamp_ntz=True))
+            return empty()
         fdf = fdf.filter(
             F.substring_index(F.col("__file"), "/", -1).isin(allowed)
         )
-        snap_src = spark.read.parquet(
-            *[f"{ckpt_dir.rstrip('/')}/{b}" for b in allowed]
+
+    def fallback():
+        # the shuffling path: decode_table runs its own composite
+        # translation, so it gets the ORIGINAL key spec
+        return decode_table(
+            _apply_restrict_chunks(
+                _checkpoint_source(spark, ckpt_dir, allowed),
+                _restrict_chunks),
+            full_schema,
+            key_range=key_range, key_col=orig_key_col, columns=columns,
+            legacy_nan_zonemaps=legacy_nan_zonemaps, value_range=value_range,
+            keys=orig_keys, value_in=value_in, contains=contains,
+            verify_checksums=verify_checksums,
         )
 
     # deletion-vector sidecars are OUT-OF-BAND on this path: excluded
     # from file discovery and the clustered gate (they live in appended
-    # files by design), collected driver-side below and delivered to the
+    # files by design), collected driver-side and delivered to the
     # readers directly. Past the cap, the shuffling path streams them.
-    # A fresh marker certifying has_deletes=False skips the sidecar scan
-    # — the hot point-lookup service pays zero per-query metadata jobs.
     fdf = fdf.filter(~F.col("column").startswith(DELETES_PREFIX))
-    dsel = ["chunk_key", "blob"] + (["checksum"] if verify_checksums else [])
-    if marker_rec is not None and marker_rec.get("has_deletes") is False:
-        drows = []
-    else:
-        drows = (
-            (snap_src if snap_src is not None
-             else spark.read.parquet(ckpt_dir))
-            .filter(F.col("column").startswith(DELETES_PREFIX))
-            .select(*dsel)
-            .limit(DELETES_COLLECT_MAX + 1)
-            .collect()
-        )
-    extra_deletes = None
-    if drows:
-        if len(drows) > DELETES_COLLECT_MAX:
-            return decode_table(
-                _apply_restrict_chunks(
-                    snap_src if snap_src is not None
-                    else spark.read.parquet(ckpt_dir), _restrict_chunks),
-                full_schema,
-                key_range=key_range, key_col=orig_key_col,
-                columns=columns,
-                legacy_nan_zonemaps=legacy_nan_zonemaps,
-                value_range=value_range, keys=orig_keys,
-                value_in=value_in,
-                contains=contains, verify_checksums=verify_checksums,
-            )
-        extra_deletes = {}
-        for r in drows:
-            blob = bytes(r["blob"])
-            if verify_checksums and r["checksum"]:
-                got = _deletes_blob_checksum(blob)
-                if got != r["checksum"]:
-                    raise IOError(
-                        f"checksum mismatch on deletion vector of chunk "
-                        f"{r['chunk_key']!r}: manifest says "
-                        f"{r['checksum']}, blob hashes to {got}"
-                    )
-            extra_deletes.setdefault(r["chunk_key"], []).append(blob)
+    extra_deletes, over = _collect_checkpoint_deletes(
+        spark, ckpt_dir, verify_checksums, files=allowed,
+        marker_rec=marker_rec)
+    if over:
+        return fallback()
     if phys is not None:
         fdf = fdf.filter(F.col("column").isin(phys))
     if key_range is not None:
         fdf = fdf.filter(_zone_keep_expr(key_range, legacy_nan_zonemaps))
-    bloom_file_keys = None  # path -> bloom-kept chunk_key list (keys= only)
-    probe_keys = _canon_temporal_keys(keys) if keys is not None else None
-    if keys is not None:
-        fdf = _prune_by_key_set(fdf, probe_keys)
-        if key_col is not None and "key_bloom" in fdf.columns:
-            # Bloom pass (see decode_table): prunes hash-layout chunks
-            # the zone maps keep, at FILE level (fewer tasks) and at
-            # chunk level inside each file (the per-file key list rides
-            # the same carrier value_range pruning uses)
-            keep = _bloom_keep_chunks(fdf, probe_keys, key_col,
-                                      extra_cols=("__file",))
-            if keep is not None:
-                fdf = _bloom_semi_join(fdf, keep)
-                bloom_file_keys = {}
-                for r in keep:
-                    bloom_file_keys.setdefault(r["__file"], []).append(r["chunk_key"])
-    # gate on the PRUNED metadata: a point lookup verifies only the
+    fdf, keep, filters = _plan_chunk_prune(
+        fdf, out_schema, added, keys=keys, key_col=key_col,
+        value_range=value_range, value_in=value_in, contains=contains)
+    # gate on the KEY-PRUNED metadata: a point lookup verifies only the
     # chunks it will read (a torn/duplicated chunk's copies share the
     # same zone maps and projection, so every hazard the full-manifest
     # check would catch in the read set survives the pruning too —
@@ -7259,7 +7218,7 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
         # now also certifying the sidecar verdict this call just scanned
         try:
             _write_clustered_marker(ckpt_dir, sig=pre_sig,
-                                    has_deletes=bool(drows))
+                                    has_deletes=extra_deletes is not None)
         except (OSError, ValueError):
             pass
     if not gate_ok:
@@ -7271,7 +7230,7 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
         if gate_ok and full_gate and pre_sig is not None:
             try:
                 _write_clustered_marker(ckpt_dir, sig=pre_sig,
-                                        has_deletes=bool(drows))
+                                        has_deletes=extra_deletes is not None)
             except (OSError, ValueError):
                 pass  # read-only / non-pyarrow-fs dir: just skip the cache
     if not gate_ok:
@@ -7283,135 +7242,29 @@ def decode_checkpoint(spark, ckpt_dir: str, out_schema=None, key_range=None,
             "compact_checkpoint(src, dst) restores the clustered layout "
             "(one shuffle) and makes every later decode shuffle-free"
         )
-        return decode_table(
-            _apply_restrict_chunks(
-                snap_src if snap_src is not None
-                else spark.read.parquet(ckpt_dir), _restrict_chunks),
-            full_schema,
-            key_range=key_range, key_col=orig_key_col, columns=columns,
-            legacy_nan_zonemaps=legacy_nan_zonemaps, value_range=value_range,
-            keys=orig_keys, value_in=value_in, contains=contains,
-            verify_checksums=verify_checksums,
-        )
-    file_keys = None  # path -> qualifying chunk_key list (value_range only)
-    vrs = []
-    if value_range is not None:
-        specs = value_range if isinstance(value_range, list) else [value_range]
-        vrs = [_prepare_value_range(out_schema, s) for s in specs]
-        # added-default columns never prune: a chunk with NO manifest
-        # rows for the column is all-default VALUES, not an absence —
-        # the exact post-filter below carries the whole predicate
-        usable = [v for v in vrs if _value_maps_col(v[:3]) in fdf.columns
-                  and v[0].split("#")[0] not in added]
-        if usable:
-            hits = _conjunctive_hit_keys(fdf, usable, extra_cols=("__file",))
-            rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                file_keys = {}
-                for r in rows:
-                    file_keys.setdefault(r["__file"], []).append(r.chunk_key)
-            else:
-                # too many qualifying chunks to ship: file-level only
-                file_keys = {r["__file"]: None for r in hits.select("__file").distinct().collect()}
-    in_expr = None
-    if value_in is not None:
-        # IN-list prune: disjunctive zone test over the value set,
-        # AND-intersected with the value_range map above (both ran on
-        # the bloom-pruned fdf, so their chunk lists are already
-        # subsets of any bloom keep)
-        in_vrs, in_expr = _prepare_value_in(out_schema, value_in)
-        if (_value_maps_col(in_vrs[0][:3]) in fdf.columns
-                and in_vrs[0][0].split("#")[0] not in added):
-            pb = (_bloom_probe_values(value_in[1])
-                  if "val_bloom" in fdf.columns else None)
-            if pb is not None:
-                hits = _contains_hit_keys(fdf, in_vrs[0][0], pb[0], pb[1],
-                                          extra_cols=("__file",))
-            else:
-                hits = _disjunctive_hit_keys(fdf, in_vrs,
-                                             extra_cols=("__file",))
-            rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                in_file_keys = {}
-                for r in rows:
-                    in_file_keys.setdefault(r["__file"], []).append(r["chunk_key"])
-            else:
-                in_file_keys = {r["__file"]: None for r in hits.select("__file").distinct().collect()}
-            file_keys = _intersect_file_keys(file_keys, in_file_keys)
-            if not file_keys:
-                return spark.createDataFrame(
-                    [], from_arrow_schema(out_schema,
-                                          prefer_timestamp_ntz=True))
-    ct_expr = None
-    if contains is not None:
-        # ARRAY-membership prune (zone + value blooms, see decode_table)
-        # — same per-file chunk-list carrier, AND-intersected with the
-        # value_range / value_in maps above
-        ct_sub, ct_probe, ct_is_str, ct_expr = _prepare_contains(
-            out_schema, contains)
-        zcol = "val_min_str" if ct_is_str else "val_min"
-        if zcol in fdf.columns and contains[0] not in added:
-            hits = _contains_hit_keys(fdf, ct_sub, ct_probe, ct_is_str,
-                                      extra_cols=("__file",))
-            rows = hits.limit(VALUE_PRUNE_MAX_KEYS + 1).collect()
-            if len(rows) <= VALUE_PRUNE_MAX_KEYS:
-                ct_file_keys = {}
-                for r in rows:
-                    ct_file_keys.setdefault(r["__file"], []).append(
-                        r["chunk_key"])
-            else:
-                ct_file_keys = {
-                    r["__file"]: None
-                    for r in hits.select("__file").distinct().collect()}
-            file_keys = _intersect_file_keys(file_keys, ct_file_keys)
-            if not file_keys:
-                return spark.createDataFrame(
-                    [], from_arrow_schema(out_schema,
-                                          prefer_timestamp_ntz=True))
-    if file_keys is None:
-        # no value_range chunk lists — the bloom keep lists (if any)
-        # drive the per-file chunk filter instead (already intersected:
-        # a value_range pass above ran on the bloom-pruned fdf)
-        file_keys = bloom_file_keys
-    if _restrict_chunks is not None:
-        file_keys = _intersect_file_keys(file_keys, _restrict_chunks)
-        if not file_keys:
-            return spark.createDataFrame(
-                [], from_arrow_schema(out_schema, prefer_timestamp_ntz=True))
-    if file_keys is not None:
-        files = sorted(file_keys)
+        return fallback()
+    keep = _intersect_file_keys(keep, _restrict_chunks)
+    if keep is not None:
+        files = sorted(keep)
     else:
         files = sorted(r["__file"] for r in fdf.select("__file").distinct().collect())
     if not files:
-        return spark.createDataFrame([], from_arrow_schema(out_schema, prefer_timestamp_ntz=True))
-    rows_in = [(f, file_keys[f] if file_keys is not None else None) for f in files]
+        return empty()
+    rows_in = [(f, keep[f] if keep is not None else None) for f in files]
     files_df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows_in, len(files)),
         "path string, keys array<string>",
     )
     out = files_df.mapInArrow(
         make_file_decode_fn(out_schema, phys, key_range, legacy_nan_zonemaps,
-                            point_keys=probe_keys,
+                            point_keys=(_canon_temporal_keys(keys)
+                                        if keys is not None else None),
                             verify_checksums=verify_checksums,
                             extra_deletes=extra_deletes,
                             defaults=added or None),
         schema=from_arrow_schema(out_schema, prefer_timestamp_ntz=True),
     )
-    from pyspark.sql import functions as F
-
-    if key_range is not None and key_col is not None:
-        lo, hi = key_range
-        out = out.filter((F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi)))
-    if keys is not None and key_col is not None:
-        out = (_filter_by_composite_keys(out, ck_parts, keys)
-               if ck_parts else _filter_by_key_set(out, key_col, keys))
-    for v in vrs:
-        out = out.filter(v[6])
-    if in_expr is not None:
-        out = out.filter(in_expr)
-    if ct_expr is not None:
-        out = out.filter(ct_expr)
-    return out
+    return _exact_filter(out, key_range, key_col, keys, ck_parts, filters)
 
 
 def compact_checkpoint(spark, src_dir: str, dst_dir: str,
@@ -9066,10 +8919,8 @@ class _Snapshot:
             if as_of is None:
                 return spark.read.parquet(ckpt_dir)
             allowed = _files_as_of(ckpt_dir, as_of)
-            if not allowed:
-                return None
-            return spark.read.parquet(
-                *[f"{ckpt_dir.rstrip('/')}/{b}" for b in allowed])
+            return (_checkpoint_source(spark, ckpt_dir, allowed)
+                    if allowed else None)
 
         return cls(spark, out_schema, load, ckpt_dir, as_of)
 
@@ -10333,17 +10184,33 @@ def _file_key_ranges(fdf, numeric: bool):
     return [(r["__file"], r["lo"], r["hi"]) for r in agg.collect()]
 
 
+def _checkpoint_source(spark, ckpt_dir: str, files=None):
+    """The checkpoint's manifest parquet: the whole directory, or only
+    ``files`` (an ``as_of`` snapshot's file names)."""
+    if files is None:
+        return spark.read.parquet(ckpt_dir)
+    return spark.read.parquet(
+        *[f"{ckpt_dir.rstrip('/')}/{b}" for b in files])
+
+
 def _collect_checkpoint_deletes(spark, ckpt_dir: str,
-                                verify_checksums: bool):
-    """Deletion-vector sidecars for a join side (same contract as
-    decode_checkpoint): dict chunk_key -> [blobs], or None past the
-    driver cap (caller falls back to the shuffling join)."""
+                                verify_checksums: bool, files=None,
+                                marker_rec=None):
+    """The deletion-vector sidecars of a checkpoint (or of its ``files``
+    snapshot), delivered out-of-band to the per-file readers:
+    ``(extra, over)`` with ``extra`` a chunk_key -> [blobs] dict (None
+    when there are none) and ``over`` True past DELETES_COLLECT_MAX (the
+    caller falls back to its shuffling path). A fresh ``_clustered``
+    marker certifying ``has_deletes=False`` skips the scan: the hot
+    point-lookup service pays zero per-query metadata jobs."""
     from pyspark.sql import functions as F
 
+    if marker_rec is not None and marker_rec.get("has_deletes") is False:
+        return None, False
     dsel = (["chunk_key", "blob"]
             + (["checksum"] if verify_checksums else []))
     drows = (
-        spark.read.parquet(ckpt_dir)
+        _checkpoint_source(spark, ckpt_dir, files)
         .filter(F.col("column").startswith(DELETES_PREFIX))
         .select(*dsel)
         .limit(DELETES_COLLECT_MAX + 1)
@@ -10558,14 +10425,14 @@ def join_checkpoints(spark, left_dir: str, right_dir: str, key_col: str,
 
     sides = []
     for d in (left_dir, right_dir):
-        extra, over = _collect_checkpoint_deletes(spark, d,
-                                                  verify_checksums)
+        marker_rec = _clustered_marker_rec(d)
+        extra, over = _collect_checkpoint_deletes(
+            spark, d, verify_checksums, marker_rec=marker_rec)
         if over:
             return fallback()
         fdf = _manifest_metadata(spark, d).filter(
             ~F.col("column").startswith(DELETES_PREFIX))
-        if (_clustered_marker_rec(d) is None
-                and not _checkpoint_is_clustered(fdf)):
+        if marker_rec is None and not _checkpoint_is_clustered(fdf):
             import warnings
 
             warnings.warn(
